@@ -9,27 +9,18 @@ object Bench {
   private[graft] def cpus: String =
     sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
 
-  /** Self-contained-run prep shared by Bench and Verify: disable the
-    * Stages disk tier and wipe the staged format-fixture roots so the
-    * invocation computes everything from the parquet inputs.
+  /** Self-contained-run prep shared by Bench and Verify: wipe the
+    * staged format-fixture roots so the invocation computes everything
+    * from the parquet inputs.
     *
-    * Two guards (ADVICE r19): `SPARK_GRAFT_STAGE_DIR` has been
-    * IGNORED by measuring runs since round 19 — automation still
-    * setting it gets a loud stderr line instead of silence; and the
-    * wipe list is relative paths, so it only runs when the cwd is
+    * The wipe list is relative paths, so it only runs when the cwd is
     * provably this build's root (`build.sbt` present) — run from an
     * anywhere-else cwd, same-named directories belonging to something
     * else are left untouched (the one-time re-stage then lands under
     * that cwd's own `target/`, which is still correct, just colder).
     */
   private[graft] def prepareSelfContainedRun(): Unit = {
-    System.clearProperty("graft.stage.dir")
-    sys.env.get("SPARK_GRAFT_STAGE_DIR").foreach { v =>
-      System.err.println("[bench] SPARK_GRAFT_STAGE_DIR is set " +
-        s"('$v') but IGNORED: measuring runs always compute stages " +
-        "from the parquet inputs (round 19 rule)")
-    }
-    val roots = Seq("target/stages", "target/warc", "target/warc_web",
+    val roots = Seq("target/warc", "target/warc_web",
       "target/jsonl", "target/jsonl_zst", "target/orc", "target/avro")
     if (new java.io.File("build.sbt").isFile)
       roots.foreach { p =>
@@ -48,21 +39,15 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = Bench.cpus
     val sfName = sfDir.split('/').last
-    // The Stages disk tier (cross-run persisted artifacts keyed on the
-    // fixture fingerprint) is DISABLED for benchmarking: every bench
-    // invocation must compute its stages from the parquet inputs, so
-    // the timed evict+rebuild passes measure the real build — a
-    // persisted artifact would turn the "rebuild" into a parquet read
-    // and silently exclude the stage cost from the total (rounds
-    // 14–18 under-reported stages this way; round 19 removed it). The
-    // tier stays available to NON-measuring callers via the
-    // graft.stage.dir system property. Staged FORMAT fixtures (the
-    // jsonl/orc/avro/warc round-trip inputs, published once per
-    // fixture fingerprint) follow the same rule: wipe their roots so
-    // this invocation synthesizes them from the parquet inputs
-    // itself. The one-time re-stage lands in each consumer's first
-    // rep and min-of-k strips it, so figures are unchanged — this
-    // just makes the run self-contained on disk.
+    // Every bench invocation computes its stages from the parquet
+    // inputs (the in-session Stages memo is the only stage tier), so
+    // the timed evict+rebuild passes measure the real build. Staged
+    // FORMAT fixtures (the jsonl/orc/avro/warc round-trip inputs,
+    // published once per fixture fingerprint) follow the same rule:
+    // wipe their roots so this invocation synthesizes them from the
+    // parquet inputs itself. The one-time re-stage lands in each
+    // consumer's first rep and min-of-k strips it, so figures are
+    // unchanged — this just makes the run self-contained on disk.
     prepareSelfContainedRun()
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")

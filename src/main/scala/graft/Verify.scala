@@ -9,14 +9,11 @@ object Verify {
     // dev convenience: trailing args subset the queries to re-dump
     val only = args.drop(2).toSet
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Stages disk tier disabled + staged format fixtures wiped, same
-    // as Bench (round 19): an oracle run must compute every stage
-    // from the parquet inputs — never read a persisted artifact a
+    // Staged format fixtures wiped, same as Bench: an oracle run must
+    // compute every input from the parquet files — never read one a
     // previous run left behind. A subsetted dev re-dump may
-    // legitimately reuse staged fixtures, so it skips the wipe (but
-    // still disables the tier).
+    // legitimately reuse staged fixtures, so it skips the wipe.
     if (only.isEmpty) Bench.prepareSelfContainedRun()
-    else System.clearProperty("graft.stage.dir")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

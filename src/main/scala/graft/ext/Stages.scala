@@ -43,9 +43,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Cluster note: `localCheckpoint` blocks live on executors —
   * right for shared read-mostly artifacts, but a lost executor loses
-  * its blocks (no lineage). For fault-critical stages on a real
-  * cluster, persist the artifact to reliable storage instead and
-  * read it back; this cache is the in-session tier.
+  * its blocks (no lineage). This cache is in-session only: staging a
+  * fault-critical artifact to reliable storage (and reading it back)
+  * is the caller's concern.
   */
 object Stages {
 
@@ -72,123 +72,6 @@ object Stages {
   private def keyOf(s: SparkSession, name: String): String =
     s"${s.sparkContext.applicationId}|$name"
 
-  // -- Disk tier ------------------------------------------------------
-  // Opt-in via the `graft.stage.dir` system property (Bench/Verify set
-  // it to target/stages/<sf>): stage artifacts additionally persist as
-  // parquet under <root>/<name>__fp<hex>, so a NEW process (the next
-  // bench round, a verify run) pays only a parquet read instead of the
-  // whole build. Invalidation stays fingerprint-driven — a regenerated
-  // fixture hashes to a new directory name and the stale sibling is
-  // deleted before the rebuilt artifact is published (tmp-dir write +
-  // atomic rename, so a concurrent process never reads a half-written
-  // stage). This is the "reliable storage" tier the cluster note below
-  // calls for: on a real cluster the root would be object storage and
-  // a lost executor costs nothing (the artifact has no lineage to
-  // lose, it is re-read).
-
-  private def diskRoot: Option[String] =
-    sys.props.get("graft.stage.dir").map(_.trim).filter(_.nonEmpty)
-
-  /** Code stamp folded into every disk key: the newest .class mtime
-    * under this library's code source (or the jar's own mtime). The
-    * fixture fingerprint alone cannot see a CODE change to a stage
-    * build — without this, editing an algorithm would keep serving
-    * the artifact the OLD code wrote. Any recompile invalidates
-    * (conservative — rebuild cost is a few seconds once per build),
-    * while every process of one build (verify, bench, its reps)
-    * still shares warm artifacts.
-    */
-  private lazy val codeStamp: Long =
-    try {
-      val src = classOf[StageCell].getProtectionDomain.getCodeSource
-      val loc = java.nio.file.Paths.get(src.getLocation.toURI)
-      if (java.nio.file.Files.isDirectory(loc)) {
-        val s = java.nio.file.Files.walk(loc)
-        try s.filter(p => p.toString.endsWith(".class"))
-          .mapToLong(p => p.toFile.lastModified()).max().orElse(0L)
-        finally s.close()
-      } else loc.toFile.lastModified()
-    } catch { case _: Throwable => 0L }
-
-  private def sanitize(name: String): String =
-    name.map(c => if (c.isLetterOrDigit || c == '.' || c == '-') c else '_')
-
-  private def deleteTree(f: java.io.File): Unit = {
-    if (f.isDirectory)
-      Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteTree)
-    f.delete(): Unit
-  }
-
-  /** Build the stage frame, persisting through the disk tier when
-    * enabled. Runs inside the cell's lock (same as the plain build).
-    * Any disk-tier failure falls back to the in-memory contract — a
-    * full filesystem or permission problem must degrade to round-7
-    * behavior, not fail the query.
-    */
-  private def materialize(s: SparkSession, name: String, fp: Long,
-                          build: () => DataFrame): DataFrame =
-    diskRoot match {
-      case None => build().localCheckpoint(true)
-      case Some(root) =>
-        try {
-          val dirName = s"${sanitize(name)}__fp${
-            java.lang.Long.toHexString(fp * 31L + codeStamp)}"
-          val dir = new java.io.File(root, dirName)
-          // reclaim crashed runs' tmp dirs EVEN when the artifact is
-          // already published (the Staging.publishOnce lesson): the
-          // stale-fingerprint sweep below only runs on the build
-          // path, so a remnant behind a published _SUCCESS would
-          // otherwise leak a partial corpus copy forever. Shared
-          // sweep = shared liveness/pid-recycling rules.
-          graft.sources.Staging.sweepDeadTmpMatching(
-            new java.io.File(root),
-            ("^" + java.util.regex.Pattern.quote(sanitize(name)) +
-              """__fp[0-9a-f]+\.tmp-(\d+)--?\d+$""").r)
-          if (!new java.io.File(dir, "_SUCCESS").isFile) {
-            val built = build()
-            // a regenerated fixture must not leak its predecessor's
-            // artifact: drop stale fingerprints of this stage first
-            Option(new java.io.File(root).listFiles())
-              .getOrElse(Array.empty)
-              .filter(f => f.getName.startsWith(sanitize(name) + "__fp")
-                && f.getName != dirName)
-              .foreach(deleteTree)
-            val tmp = new java.io.File(root,
-              s"$dirName.tmp-${ProcessHandle.current().pid()}-${System.nanoTime()}")
-            // any failure between here and the move must not leak the
-            // tmp dir: the stale-fingerprint sweep above only matches
-            // published names, so an orphaned .tmp-* would otherwise
-            // accumulate a partial corpus-sized copy per failed run
-            try {
-              graft.sources.ParquetSink.write(built, tmp.getPath,
-                Seq.empty, built(built.columns.head), buckets = 4)
-              try
-                java.nio.file.Files.move(tmp.toPath, dir.toPath,
-                  java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-              catch {
-                // lost a publish race to another process: its artifact
-                // is equivalent (same fingerprint) — keep it, drop ours
-                case _: java.nio.file.FileSystemException
-                    if new java.io.File(dir, "_SUCCESS").isFile =>
-                  deleteTree(tmp)
-              }
-            } catch {
-              case e: Throwable =>
-                try deleteTree(tmp) catch { case _: Throwable => () }
-                throw e
-            }
-          }
-          s.read.parquet(dir.getPath)
-        } catch {
-          case e: Throwable =>
-            System.err.println(s"[stages] disk tier failed for $name " +
-              s"(${e.getClass.getSimpleName}: ${Option(e.getMessage)
-                .getOrElse("").takeWhile(_ != '\n').take(120)}); " +
-              "falling back to localCheckpoint")
-            build().localCheckpoint(true)
-        }
-    }
-
   /** The memoized frame for (session, `name`); `build` runs at most
     * once per fingerprint. See the object scaladoc for the contract.
     */
@@ -201,7 +84,7 @@ object Stages {
     }
     val key = keyOf(s, name)
     val fresh = new StageCell(fingerprint, s.sparkContext,
-      () => materialize(s, name, fingerprint, () => build))
+      () => build.localCheckpoint(true))
     var cell = cache.putIfAbsent(key, fresh)
     if (cell == null) cell = fresh
     else if (cell.fp != fingerprint) {

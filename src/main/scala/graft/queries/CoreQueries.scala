@@ -15,8 +15,11 @@ object CoreQueries {
 
   /** Fixed run timestamp so the pipeline is oracle-deterministic
     * (F11's single-`now()`-per-run semantics, Angelo_ETL_Task.py:182).
+    * A constant (`final val`, no type ascription) so [[I2b2Oracle]]
+    * inlines it: reading it must not initialize this object, whose
+    * `oracleSql` reads I2b2Oracle's strings back.
     */
-  val RunTs = "01-01-2026 00:00:00"
+  final val RunTs = "01-01-2026 00:00:00"
 
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Tables.load(s, dir, name)

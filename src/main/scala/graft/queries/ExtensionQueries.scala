@@ -35,6 +35,11 @@ object ExtensionQueries {
   private[graft] def evictStages(s: SparkSession, dir: String): Unit =
     ExtensionSupport.evictStages(s, dir)
 
+  /** See [[ExtensionSupport.evictStage]]. */
+  private[graft] def evictStage(s: SparkSession, dir: String,
+                                name: String): Unit =
+    ExtensionSupport.evictStage(s, dir, name)
+
   /** See [[ExtensionSupport.stageThunks]]. */
   private[graft] def stageThunks(s: SparkSession, dir: String)
       : Seq[(String, () => org.apache.spark.sql.DataFrame)] =
@@ -44,9 +49,4 @@ object ExtensionQueries {
   private[graft] def stageRawFrames(s: SparkSession, dir: String)
       : Seq[(String, () => org.apache.spark.sql.DataFrame)] =
     ExtensionSupport.stageRawFrames(s, dir)
-
-  /** See [[ExtensionSupport.scaleTargetStages]]. */
-  private[graft] def scaleTargetStages(s: SparkSession, dir: String)
-      : Seq[(String, () => org.apache.spark.sql.DataFrame)] =
-    ExtensionSupport.scaleTargetStages(s, dir)
 }

@@ -20,71 +20,72 @@ private[queries] object MultimodalQueries {
     * shared stage (the `events_census` discipline) so the BENCH row
     * times the decoder + aggregation, not the fixture ENCODER that a
     * production corpus would never run (the blobs arrive from
-    * storage). Deterministic closed form of doc_id, so the disk tier
-    * may persist it.
+    * storage).
     */
   private[queries] def pixelBlobs(s: SparkSession, dir: String): DataFrame =
-    memo(s, dir, "mm_pixel_blobs") {
-      import s.implicits._
-      DedupOps.spreadNarrow(docs(s, dir).select(col("doc_id")),
-          cap = math.max(2, s.sparkContext.defaultParallelism / 4))
-        .as[Long]
-        .mapPartitions { ids =>
-          ids.map { id =>
-            val w = (id % 12 + 4).toInt
-            val h = (id % 9 + 3).toInt
-            val m = (id % 256).toInt
-            val rgb = (x: Int, y: Int) =>
-              (((m + 3 * x + 7 * y) % 256) << 16) |
-                (((2 * m + 5 * x + y) % 256) << 8) |
-                ((3 * m + x + 11 * y) % 256)
-            val gray = (x: Int, y: Int) => (m + 3 * x + 7 * y) % 256
-            // block-flat mixing shared by all four JPEG variants:
-            // DC g·8−1024 decodes to EXACTLY g (the closed form), so
-            // the oracle renders v ∈ {4,5,6,7} identically and only
-            // the dims differ
-            val blockG = (bx: Int, by: Int) =>
-              ((m + 13 * bx + 29 * by) % 256) * 8 - 1024
-            val bytes = (id % 8) match {
-              case 0 => // half the truecolor PNGs are Adam7 and half
-                // are 16-bit (bit-replicated samples): both are
-                // layout/precision choices whose decoded raster is
-                // IDENTICAL, so the oracle is blind to the splits
-                // while the pass machinery and wide-sample filters run
-                PixelEncoder.png(w, h, rgb,
-                  interlace = (id / 8) % 2 == 0,
-                  bitDepth = if ((id / 16) % 2 == 0) 16 else 8)
-              case 1 => // grayscale; half via an identity-gray PLTE
-                // (palette index == gray value — decoded raster
-                // identical, so the oracle is blind while the
-                // paletted path runs)
-                if ((id / 8) % 2 == 0)
-                  PixelEncoder.pngPaletted(w, h, gray,
-                    Array.tabulate(256)(g => (g << 16) | (g << 8) | g),
-                    bitDepth = 8)
-                else PixelEncoder.png(w, h, gray, colorType = 0)
-              case 2 => PixelEncoder.bmp(w, h, rgb)
-              case 3 => // LZW round-trip; half interlaced (layout-
-                // only, like the Adam7 PNGs — oracle-invisible)
-                PixelEncoder.gif(w, h, gray,
-                  interlace = (id / 8) % 2 == 1)
-              case 4 => // baseline JPEG, DC-only grayscale
-                JpegEncoder.grayDcOnly(w, h, blockG)
-              case 5 => // 4:2:0 — 16×16 MCUs, neutral chroma; dims
-                // snap to the MCU grid (no padding blocks)
-                JpegEncoder.yccDcOnly(16 + (id % 2).toInt * 16, 16,
-                  blockG, hs = 2, vs = 2)
-              case 6 => // 4:2:2 — 16×8 MCUs
-                JpegEncoder.yccDcOnly(16 + (id % 2).toInt * 16,
-                  8 + (id % 3).toInt * 8, blockG, hs = 2, vs = 1)
-              case _ => // progressive (SOF2), three scans, same
-                // closed form as the baseline DC-only variant
-                JpegEncoder.grayDcOnlyProgressive(w, h, blockG)
-            }
-            (id, bytes)
+    stage(s, dir, "mm_pixel_blobs")
+
+  private[queries] def pixelBlobsRaw(s: SparkSession, dir: String): DataFrame = {
+    import s.implicits._
+    DedupOps.spreadNarrow(docs(s, dir).select(col("doc_id")),
+        cap = math.max(2, s.sparkContext.defaultParallelism / 4))
+      .as[Long]
+      .mapPartitions { ids =>
+        ids.map { id =>
+          val w = (id % 12 + 4).toInt
+          val h = (id % 9 + 3).toInt
+          val m = (id % 256).toInt
+          val rgb = (x: Int, y: Int) =>
+            (((m + 3 * x + 7 * y) % 256) << 16) |
+              (((2 * m + 5 * x + y) % 256) << 8) |
+              ((3 * m + x + 11 * y) % 256)
+          val gray = (x: Int, y: Int) => (m + 3 * x + 7 * y) % 256
+          // block-flat mixing shared by all four JPEG variants:
+          // DC g·8−1024 decodes to EXACTLY g (the closed form), so
+          // the oracle renders v ∈ {4,5,6,7} identically and only
+          // the dims differ
+          val blockG = (bx: Int, by: Int) =>
+            ((m + 13 * bx + 29 * by) % 256) * 8 - 1024
+          val bytes = (id % 8) match {
+            case 0 => // half the truecolor PNGs are Adam7 and half
+              // are 16-bit (bit-replicated samples): both are
+              // layout/precision choices whose decoded raster is
+              // IDENTICAL, so the oracle is blind to the splits
+              // while the pass machinery and wide-sample filters run
+              PixelEncoder.png(w, h, rgb,
+                interlace = (id / 8) % 2 == 0,
+                bitDepth = if ((id / 16) % 2 == 0) 16 else 8)
+            case 1 => // grayscale; half via an identity-gray PLTE
+              // (palette index == gray value — decoded raster
+              // identical, so the oracle is blind while the
+              // paletted path runs)
+              if ((id / 8) % 2 == 0)
+                PixelEncoder.pngPaletted(w, h, gray,
+                  Array.tabulate(256)(g => (g << 16) | (g << 8) | g),
+                  bitDepth = 8)
+              else PixelEncoder.png(w, h, gray, colorType = 0)
+            case 2 => PixelEncoder.bmp(w, h, rgb)
+            case 3 => // LZW round-trip; half interlaced (layout-
+              // only, like the Adam7 PNGs — oracle-invisible)
+              PixelEncoder.gif(w, h, gray,
+                interlace = (id / 8) % 2 == 1)
+            case 4 => // baseline JPEG, DC-only grayscale
+              JpegEncoder.grayDcOnly(w, h, blockG)
+            case 5 => // 4:2:0 — 16×16 MCUs, neutral chroma; dims
+              // snap to the MCU grid (no padding blocks)
+              JpegEncoder.yccDcOnly(16 + (id % 2).toInt * 16, 16,
+                blockG, hs = 2, vs = 2)
+            case 6 => // 4:2:2 — 16×8 MCUs
+              JpegEncoder.yccDcOnly(16 + (id % 2).toInt * 16,
+                8 + (id % 3).toInt * 8, blockG, hs = 2, vs = 1)
+            case _ => // progressive (SOF2), three scans, same
+              // closed form as the baseline DC-only variant
+              JpegEncoder.grayDcOnlyProgressive(w, h, blockG)
           }
-        }.toDF("doc_id", "blob")
-    }
+          (id, bytes)
+        }
+      }.toDF("doc_id", "blob")
+  }
 
   /** Synthesized 10×6 near-dup image blobs for `mm_ahash_pairs` —
     * staged for the same reason as [[pixelBlobs]]. Every run of five
@@ -109,39 +110,41 @@ private[queries] object MultimodalQueries {
     * must never rely on overflow.
     */
   private[queries] def ahashBlobs(s: SparkSession, dir: String): DataFrame =
-    memo(s, dir, "mm_ahash_blobs") {
-      import s.implicits._
-      DedupOps.spreadNarrow(docs(s, dir).select(col("doc_id")),
-          cap = math.max(2, s.sparkContext.defaultParallelism / 4))
-        .as[Long]
-        .mapPartitions { ids =>
-          ids.map { id =>
-            val grp = id / 5
-            val v = (x: Int, y: Int) => {
-              val h = ((grp % 65536 + 1) * (x * 151 + y * 211 + 1)
-                + grp * 7919) % 65536
-              val g = ((h * 2654435761L / 1024) % 256).toInt
-              (g << 16) | (g << 8) | g
-            }
-            // r=g=b in the PNG/BMP rasters, palette-index gray in
-            // the GIF, and the identity-gray PLTE of the RLE8 BMP
-            // all reduce to the same integer luma — four container
-            // codings, ONE decoded raster, so the oracle's closed
-            // form is format-blind
-            val bytes = (grp % 4) match {
-              case 0 => PixelEncoder.png(10, 6, v)
-              case 1 => PixelEncoder.bmp(10, 6, v)
-              case 2 => PixelEncoder.gif(10, 6,
-                (x, y) => v(x, y) & 0xff)
-              case _ => PixelEncoder.bmpPaletted(10, 6,
-                (x, y) => v(x, y) & 0xff,
-                Array.tabulate(256)(g => (g << 16) | (g << 8) | g),
-                rle = true)
-            }
-            (id, bytes)
+    stage(s, dir, "mm_ahash_blobs")
+
+  private[queries] def ahashBlobsRaw(s: SparkSession, dir: String): DataFrame = {
+    import s.implicits._
+    DedupOps.spreadNarrow(docs(s, dir).select(col("doc_id")),
+        cap = math.max(2, s.sparkContext.defaultParallelism / 4))
+      .as[Long]
+      .mapPartitions { ids =>
+        ids.map { id =>
+          val grp = id / 5
+          val v = (x: Int, y: Int) => {
+            val h = ((grp % 65536 + 1) * (x * 151 + y * 211 + 1)
+              + grp * 7919) % 65536
+            val g = ((h * 2654435761L / 1024) % 256).toInt
+            (g << 16) | (g << 8) | g
           }
-        }.toDF("doc_id", "blob")
-    }
+          // r=g=b in the PNG/BMP rasters, palette-index gray in
+          // the GIF, and the identity-gray PLTE of the RLE8 BMP
+          // all reduce to the same integer luma — four container
+          // codings, ONE decoded raster, so the oracle's closed
+          // form is format-blind
+          val bytes = (grp % 4) match {
+            case 0 => PixelEncoder.png(10, 6, v)
+            case 1 => PixelEncoder.bmp(10, 6, v)
+            case 2 => PixelEncoder.gif(10, 6,
+              (x, y) => v(x, y) & 0xff)
+            case _ => PixelEncoder.bmpPaletted(10, 6,
+              (x, y) => v(x, y) & 0xff,
+              Array.tabulate(256)(g => (g << 16) | (g << 8) | g),
+              rle = true)
+          }
+          (id, bytes)
+        }
+      }.toDF("doc_id", "blob")
+  }
 
   /** Synthesized 32×32 blobs for `mm_phash_pairs` — the pHash DCT
     * needs at least its 32×32 pool, so this stage renders full-pool
@@ -149,86 +152,90 @@ private[queries] object MultimodalQueries {
     * png/bmp/gif rotation as [[ahashBlobs]].
     */
   private[queries] def phashBlobs(s: SparkSession, dir: String): DataFrame =
-    memo(s, dir, "mm_phash_blobs") {
-      import s.implicits._
-      DedupOps.spreadNarrow(docs(s, dir).select(col("doc_id")),
-          cap = math.max(2, s.sparkContext.defaultParallelism / 4))
-        .as[Long]
-        .mapPartitions { ids =>
-          ids.map { id =>
-            val grp = id / 5
-            val v = (x: Int, y: Int) => {
-              val h = ((grp % 65536 + 1) * (x * 151 + y * 211 + 1)
-                + grp * 7919) % 65536
-              val g = ((h * 2654435761L / 1024) % 256).toInt
-              (g << 16) | (g << 8) | g
-            }
-            val bytes = (grp % 3) match {
-              case 0 => PixelEncoder.png(32, 32, v)
-              case 1 => PixelEncoder.bmp(32, 32, v)
-              case _ => PixelEncoder.gif(32, 32,
-                (x, y) => v(x, y) & 0xff)
-            }
-            (id, bytes)
+    stage(s, dir, "mm_phash_blobs")
+
+  private[queries] def phashBlobsRaw(s: SparkSession, dir: String): DataFrame = {
+    import s.implicits._
+    DedupOps.spreadNarrow(docs(s, dir).select(col("doc_id")),
+        cap = math.max(2, s.sparkContext.defaultParallelism / 4))
+      .as[Long]
+      .mapPartitions { ids =>
+        ids.map { id =>
+          val grp = id / 5
+          val v = (x: Int, y: Int) => {
+            val h = ((grp % 65536 + 1) * (x * 151 + y * 211 + 1)
+              + grp * 7919) % 65536
+            val g = ((h * 2654435761L / 1024) % 256).toInt
+            (g << 16) | (g << 8) | g
           }
-        }.toDF("doc_id", "blob")
-    }
+          val bytes = (grp % 3) match {
+            case 0 => PixelEncoder.png(32, 32, v)
+            case 1 => PixelEncoder.bmp(32, 32, v)
+            case _ => PixelEncoder.gif(32, 32,
+              (x, y) => v(x, y) & 0xff)
+          }
+          (id, bytes)
+        }
+      }.toDF("doc_id", "blob")
+  }
 
   /** Synthesized 120-sample WAV blobs for `mm_audio_fingerprint` —
     * staged for the same reason as [[pixelBlobs]].
     */
   private[queries] def audioBlobs(s: SparkSession, dir: String): DataFrame =
-    memo(s, dir, "mm_audio_blobs") {
-      import s.implicits._
-      DedupOps.spreadNarrow(docs(s, dir).select(col("doc_id")),
-          cap = math.max(2, s.sparkContext.defaultParallelism / 4))
-        .as[Long]
-        .mapPartitions { ids =>
-          ids.map { id =>
-            val grp = id / 5
-            // grp % 4 picks the coding — whole groups share one blob
-            // so the every-5-share near-dup design is preserved:
-            // 0 = 16-bit linear PCM WAV; 1 = G.711 μ-law; 2 = A-law;
-            // 3 = FLAC of the SAME linear samples (lossless, so the
-            // oracle's linear closed form holds through the rice/
-            // fixed-predictor decode unchanged).
-            // The companded members carry the closed form as RAW
-            // code bytes, so the DECODER's table expansion is what
-            // the oracle's G.711 closed form verifies. The mixing
-            // multiplies the time term by (grp + 1) — the
-            // group-dependent slope that keeps fingerprints
-            // group-local (see [[ahashBlobs]]) — and the G.711
-            // codes stay within two positive segments (μ-law
-            // u ∈ [0xD0, 0xF0), A-law pre-XOR a' ∈ [0x20, 0x40)):
-            // uniform bytes over the FULL code space expand to
-            // exponentially heavy-tailed magnitudes, making every
-            // fingerprint a sparse indicator of its extreme windows.
-            def mix(t: Int): Long = {
-              val h = ((grp % 65536 + 1) * (t * 101 + 1)
-                + grp * 7919) % 65536
-              h * 2654435761L / 1024
-            }
-            val bytes = (grp % 4) match {
-              case 0 =>
-                val samples = Array.tabulate(120)(t =>
-                  (mix(t) % 512).toInt - 256)
-                WavEncoder.pcm16(samples)
-              case 3 =>
-                val samples = Array.tabulate(120)(t =>
-                  (mix(t) % 512).toInt - 256)
-                FlacEncoder.encode(Array(samples), 16000,
-                  mode = "fixed2")
-              case r =>
-                val codes = Array.tabulate(120) { t =>
-                  val m = (mix(t) % 32).toInt
-                  if (r == 1) 0xd0 + m else (0x20 + m) ^ 0x55
-                }
-                WavEncoder.g711(codes, tag = if (r == 1) 7 else 6)
-            }
-            (id, bytes)
+    stage(s, dir, "mm_audio_blobs")
+
+  private[queries] def audioBlobsRaw(s: SparkSession, dir: String): DataFrame = {
+    import s.implicits._
+    DedupOps.spreadNarrow(docs(s, dir).select(col("doc_id")),
+        cap = math.max(2, s.sparkContext.defaultParallelism / 4))
+      .as[Long]
+      .mapPartitions { ids =>
+        ids.map { id =>
+          val grp = id / 5
+          // grp % 4 picks the coding — whole groups share one blob
+          // so the every-5-share near-dup design is preserved:
+          // 0 = 16-bit linear PCM WAV; 1 = G.711 μ-law; 2 = A-law;
+          // 3 = FLAC of the SAME linear samples (lossless, so the
+          // oracle's linear closed form holds through the rice/
+          // fixed-predictor decode unchanged).
+          // The companded members carry the closed form as RAW
+          // code bytes, so the DECODER's table expansion is what
+          // the oracle's G.711 closed form verifies. The mixing
+          // multiplies the time term by (grp + 1) — the
+          // group-dependent slope that keeps fingerprints
+          // group-local (see [[ahashBlobs]]) — and the G.711
+          // codes stay within two positive segments (μ-law
+          // u ∈ [0xD0, 0xF0), A-law pre-XOR a' ∈ [0x20, 0x40)):
+          // uniform bytes over the FULL code space expand to
+          // exponentially heavy-tailed magnitudes, making every
+          // fingerprint a sparse indicator of its extreme windows.
+          def mix(t: Int): Long = {
+            val h = ((grp % 65536 + 1) * (t * 101 + 1)
+              + grp * 7919) % 65536
+            h * 2654435761L / 1024
           }
-        }.toDF("doc_id", "blob")
-    }
+          val bytes = (grp % 4) match {
+            case 0 =>
+              val samples = Array.tabulate(120)(t =>
+                (mix(t) % 512).toInt - 256)
+              WavEncoder.pcm16(samples)
+            case 3 =>
+              val samples = Array.tabulate(120)(t =>
+                (mix(t) % 512).toInt - 256)
+              FlacEncoder.encode(Array(samples), 16000,
+                mode = "fixed2")
+            case r =>
+              val codes = Array.tabulate(120) { t =>
+                val m = (mix(t) % 32).toInt
+                if (r == 1) 0xd0 + m else (0x20 + m) ^ 0x55
+              }
+              WavEncoder.g711(codes, tag = if (r == 1) 7 else 6)
+          }
+          (id, bytes)
+        }
+      }.toDF("doc_id", "blob")
+  }
 
   /** Synthesized MJPEG-AVI clips for `mm_video_frames` — staged for
     * the same reason as [[pixelBlobs]]. Each doc is a 2/4/6-frame
@@ -237,22 +244,24 @@ private[queries] object MultimodalQueries {
     * sampled pixel is `(dc + 4) // 8 + 128` in the oracle.
     */
   private[queries] def videoBlobs(s: SparkSession, dir: String): DataFrame =
-    memo(s, dir, "mm_video_blobs") {
-      import s.implicits._
-      DedupOps.spreadNarrow(docs(s, dir).select(col("doc_id")),
-          cap = math.max(2, s.sparkContext.defaultParallelism / 4))
-        .as[Long]
-        .mapPartitions { ids =>
-          ids.map { id =>
-            val n = ((id % 3) * 2 + 2).toInt
-            val frames = (0 until n).map { f =>
-              JpegEncoder.grayDcOnly(16, 8, (bx, _) =>
-                ((id * 31 + f * 97 + bx * 53) % 256).toInt - 128)
-            }
-            (id, MjpegAvi.encode(frames, 16, 8, usPerFrame = 33333))
+    stage(s, dir, "mm_video_blobs")
+
+  private[queries] def videoBlobsRaw(s: SparkSession, dir: String): DataFrame = {
+    import s.implicits._
+    DedupOps.spreadNarrow(docs(s, dir).select(col("doc_id")),
+        cap = math.max(2, s.sparkContext.defaultParallelism / 4))
+      .as[Long]
+      .mapPartitions { ids =>
+        ids.map { id =>
+          val n = ((id % 3) * 2 + 2).toInt
+          val frames = (0 until n).map { f =>
+            JpegEncoder.grayDcOnly(16, 8, (bx, _) =>
+              ((id * 31 + f * 97 + bx * 53) % 256).toInt - 128)
           }
-        }.toDF("doc_id", "blob")
-    }
+          (id, MjpegAvi.encode(frames, 16, 8, usPerFrame = 33333))
+        }
+      }.toDF("doc_id", "blob")
+  }
 
   /** Near-dup video clips for `mm_video_dup_pairs` — every run of
     * five doc ids shares one 3-frame 80×48 MJPEG clip. Frame 0 is
@@ -263,28 +272,30 @@ private[queries] object MultimodalQueries {
     * inside an oracle-checked row.
     */
   private[queries] def vdupBlobs(s: SparkSession, dir: String): DataFrame =
-    memo(s, dir, "mm_vdup_blobs") {
-      import s.implicits._
-      DedupOps.spreadNarrow(docs(s, dir).select(col("doc_id")),
-          cap = math.max(2, s.sparkContext.defaultParallelism / 4))
-        .as[Long]
-        .mapPartitions { ids =>
-          ids.map { id =>
-            val grp = id / 5
-            def g(bx: Int, by: Int, f: Int): Int = {
-              val h = ((grp % 65536 + 1) *
-                (bx * 151 + by * 211 + 1 + f * 631)
-                + grp * 7919) % 65536
-              ((h * 2654435761L / 1024) % 256).toInt
-            }
-            val frames = (0 until 3).map { f =>
-              JpegEncoder.grayDcOnly(80, 48,
-                (bx, by) => g(bx, by, f) * 8 - 1024)
-            }
-            (id, MjpegAvi.encode(frames, 80, 48, usPerFrame = 33333))
+    stage(s, dir, "mm_vdup_blobs")
+
+  private[queries] def vdupBlobsRaw(s: SparkSession, dir: String): DataFrame = {
+    import s.implicits._
+    DedupOps.spreadNarrow(docs(s, dir).select(col("doc_id")),
+        cap = math.max(2, s.sparkContext.defaultParallelism / 4))
+      .as[Long]
+      .mapPartitions { ids =>
+        ids.map { id =>
+          val grp = id / 5
+          def g(bx: Int, by: Int, f: Int): Int = {
+            val h = ((grp % 65536 + 1) *
+              (bx * 151 + by * 211 + 1 + f * 631)
+              + grp * 7919) % 65536
+            ((h * 2654435761L / 1024) % 256).toInt
           }
-        }.toDF("doc_id", "blob")
-    }
+          val frames = (0 until 3).map { f =>
+            JpegEncoder.grayDcOnly(80, 48,
+              (bx, by) => g(bx, by, f) * 8 - 1024)
+          }
+          (id, MjpegAvi.encode(frames, 80, 48, usPerFrame = 33333))
+        }
+      }.toDF("doc_id", "blob")
+  }
 
   /** Decode-once image features over [[ahashBlobs]] (stats + aHash +
     * dHash from ONE raster decode), memoized: curate_images references
@@ -293,9 +304,10 @@ private[queries] object MultimodalQueries {
     * DataFrame reference re-runs the full pixel decode of the corpus.
     */
   private[queries] def imgFeats(s: SparkSession, dir: String): DataFrame =
-    memo(s, dir, "mm_img_feats") {
-      Multimodal.curationFeatures(ahashBlobs(s, dir))
-    }
+    stage(s, dir, "mm_img_feats")
+
+  private[queries] def imgFeatsRaw(s: SparkSession, dir: String): DataFrame =
+    Multimodal.curationFeatures(ahashBlobs(s, dir))
 
   /** Decode-once video clip features over [[vdupBlobs]] (keyframe
     * brightness + shot count + keyframe aHash), memoized for the same
@@ -307,10 +319,11 @@ private[queries] object MultimodalQueries {
     * contract (decoy frames never decoded).
     */
   private[queries] def videoFeats(s: SparkSession, dir: String): DataFrame =
-    memo(s, dir, "mm_video_feats") {
-      Multimodal.videoCurationFeatures(vdupBlobs(s, dir),
-        cutThreshold = 15)
-    }
+    stage(s, dir, "mm_video_feats")
+
+  private[queries] def videoFeatsRaw(s: SparkSession, dir: String): DataFrame =
+    Multimodal.videoCurationFeatures(vdupBlobs(s, dir),
+      cutThreshold = 15)
 
   /** The curate_captions cue table (per-doc SRT fixture — one
     * "[Music]" boilerplate cue interleaved among the unique speech
@@ -319,24 +332,26 @@ private[queries] object MultimodalQueries {
     * + anti-join probe).
     */
   private[queries] def captionCues(s: SparkSession, dir: String): DataFrame =
-    memo(s, dir, "mm_caption_cues") {
-      import s.implicits._
-      val srts = docs(s, dir).select(col("doc_id")).as[Long]
-        .mapPartitions { ids =>
-          ids.map { id =>
-            val n = (id % 4 + 1).toInt
-            val speech = (1 to n).map { i =>
-              val start = id % 1000 + (i - 1) * 2000L
-              (i, start, start + 1500L, s"cue $i of doc $id")
-            }
-            val music = (n + 1, id % 1000 + n * 2000L,
-              id % 1000 + n * 2000L + 800L, "[Music]")
-            (id, Subtitles.buildSrt(speech :+ music))
+    stage(s, dir, "mm_caption_cues")
+
+  private[queries] def captionCuesRaw(s: SparkSession, dir: String): DataFrame = {
+    import s.implicits._
+    val srts = docs(s, dir).select(col("doc_id")).as[Long]
+      .mapPartitions { ids =>
+        ids.map { id =>
+          val n = (id % 4 + 1).toInt
+          val speech = (1 to n).map { i =>
+            val start = id % 1000 + (i - 1) * 2000L
+            (i, start, start + 1500L, s"cue $i of doc $id")
           }
-        }.toDF("doc_id", "srt")
-      Subtitles.cues(srts, col("doc_id"), col("srt"))
-        .withColumnRenamed("id", "doc_id")
-    }
+          val music = (n + 1, id % 1000 + n * 2000L,
+            id % 1000 + n * 2000L + 800L, "[Music]")
+          (id, Subtitles.buildSrt(speech :+ music))
+        }
+      }.toDF("doc_id", "srt")
+    Subtitles.cues(srts, col("doc_id"), col("srt"))
+      .withColumnRenamed("id", "doc_id")
+  }
 
   /** Decode-once audio features over [[audioBlobs]] (VAD census +
     * energy fingerprint), memoized for the same fan-out reason as
@@ -344,10 +359,11 @@ private[queries] object MultimodalQueries {
     * mm_audio_fingerprint needs the signature.
     */
   private[queries] def audioFeats(s: SparkSession, dir: String): DataFrame =
-    memo(s, dir, "mm_audio_feats") {
-      Multimodal.audioCurationFeatures(audioBlobs(s, dir),
-        threshold = 128)
-    }
+    stage(s, dir, "mm_audio_feats")
+
+  private[queries] def audioFeatsRaw(s: SparkSession, dir: String): DataFrame =
+    Multimodal.audioCurationFeatures(audioBlobs(s, dir),
+      threshold = 128)
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

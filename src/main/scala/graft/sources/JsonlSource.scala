@@ -26,7 +26,7 @@ import org.apache.spark.sql.types.StructType
 object JsonlSource {
 
   /** Stage `df` as JSONL under `root/name__fp<hex>` at most once per
-    * `fingerprint` (same contract as the stage disk tier: a changed
+    * `fingerprint` (the [[Staging.publishOnce]] contract: a changed
     * input hashes to a new directory, stale siblings are deleted
     * before the write publishes via _SUCCESS). Returns the staged
     * path. Dev/test harness plumbing — production corpora already

@@ -12,9 +12,9 @@ package graft.sources
   * hand-rolled writers must create it), so a protocol fix applied to
   * one copy would silently miss the rest.
   */
-// private[graft] (not [sources]): the stage disk tier (graft.ext
-// .Stages) shares the dead-pid tmp sweep — still invisible outside
-// the library.
+// private[graft] (not [sources]): specs outside graft.sources drive
+// the dead-pid tmp sweep directly — still invisible outside the
+// library.
 private[graft] object Staging {
 
   private[sources] def safeName(name: String): String =
@@ -51,8 +51,8 @@ private[graft] object Staging {
     * liveness is a LOCAL ProcessHandle probe and the lock a local
     * FileLock, so a staging root shared between machines (NFS) could
     * see host B sweep host A's in-flight tmp because A's pid doesn't
-    * exist on B. The stage tier lives under this repo's local
-    * `target/`; a multi-host stage root would need lease files, not
+    * exist on B. The staging roots live under this repo's local
+    * `target/`; a multi-host staging root would need lease files, not
     * pid probes.
     */
   private def sweepDeadTmp(root: java.io.File, safe: String): Unit =
@@ -64,10 +64,9 @@ private[graft] object Staging {
         """__fp[0-9a-f]+\.tmp-(\d+)--?\d+$""").r)
 
   /** The dead-pid tmp sweep with a caller-supplied name pattern
-    * (ONE capture group: the embedded pid) — shared with the stage
-    * disk tier ([[graft.ext.Stages]]), whose tmp names differ only
-    * in prefix shape; the liveness/pid-recycling rules must not be
-    * re-derived per writer.
+    * (ONE capture group: the embedded pid), so a writer whose tmp
+    * names differ only in prefix shape reuses the liveness/
+    * pid-recycling rules instead of re-deriving them.
     */
   private[graft] def sweepDeadTmpMatching(
       root: java.io.File, TmpName: scala.util.matching.Regex): Unit = {
@@ -92,8 +91,7 @@ private[graft] object Staging {
           // (live pid but started after the dir's last write), or
           // "age-fallback" (no start time exposed, dir >24 h stale —
           // the one rule that can reclaim a stalled-but-alive
-          // writer's tmp; the disk tier then degrades to in-memory
-          // rather than corrupting).
+          // writer's tmp).
           var rule = "dead-pid"
           val alive = scala.util.Try {
             ProcessHandle.of(pid.toLong).map[Boolean] { h =>

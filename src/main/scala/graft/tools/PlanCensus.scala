@@ -18,7 +18,6 @@ object PlanCensus {
   def main(args: Array[String]): Unit = {
     val sfDir = args.lift(0).getOrElse("/root/testdata/sf0.01")
     val prefix = args.lift(1).getOrElse("")
-    System.clearProperty("graft.stage.dir")
     val cpus = graft.Bench.cpus
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")

@@ -14,9 +14,6 @@ object QProbe {
     val reps = args.lift(1).map(_.toInt).getOrElse(5)
     val names = args.lift(2).map(_.split(',').toSeq)
       .getOrElse(Seq("ts_resample_locf"))
-    // No stage disk tier — mirrors Bench (round 19): probe figures
-    // must include the same real stage builds the official bench pays.
-    System.clearProperty("graft.stage.dir")
     // MUST mirror graft.Bench's session config — probe timings exist
     // to approximate the official figures; a drifted partitions
     // count or timezone silently makes them non-comparable. The

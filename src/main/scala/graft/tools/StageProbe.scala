@@ -3,16 +3,20 @@ package graft.tools
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+import graft.queries.ExtensionQueries
 
 /** Ad-hoc STAGE-build probe with task telemetry — the shared-stage
-  * twin of [[QProbe]] (which times queries): fresh-builds a named
-  * stage at each given dir, reporting wall, task count, summed task
-  * time, max task, GC, and shuffle bytes per rep. Exists to separate
-  * WALL artifacts (AQE partition coalescing under-filling threads on
-  * small tiers, scheduler/GC weather) from WORK growth when a
-  * SF10_SMOKE.md cell looks anomalous — wall moving while summed
-  * task time and shuffle bytes hold is idle threads, not extra work.
+  * twin of [[QProbe]] (which times queries): for any stage of the
+  * stage table, prints its raw build's formatted plan once per dir,
+  * then fresh-builds it (evict → build → count) per rep, reporting
+  * wall, task count, summed task time, max task, GC, and shuffle
+  * bytes. Exists to separate WALL artifacts (AQE partition coalescing
+  * under-filling threads on small tiers, scheduler/GC weather) from
+  * WORK growth when a SF10_SMOKE.md cell looks anomalous — wall
+  * moving while summed task time and shuffle bytes hold is idle
+  * threads, not extra work.
   *
   * `runMain graft.tools.StageProbe <stage> <reps> <dir1,dir2,...>`
   * Dev-loop tool only; official figures come from [[graft.Bench]] /
@@ -50,13 +54,15 @@ object StageProbe {
     }
     spark.sparkContext.addSparkListener(probe)
     for (dir <- dirs) {
-      val build = graft.queries.ExtensionQueries
-        .scaleTargetStages(spark, dir)
-        .collectFirst { case (`stageName`, b) => b }
-        .getOrElse(sys.error(s"no scale-target stage '$stageName' — " +
-          "see ExtensionSupport.scaleTargetStages"))
+      def lookup(all: Seq[(String, () => DataFrame)]) =
+        all.collectFirst { case (`stageName`, b) => b }
+          .getOrElse(sys.error(s"no DataFrame stage '$stageName' in " +
+            "the stage table (ExtensionSupport.StageTable)"))
+      val build = lookup(ExtensionQueries.stageThunks(spark, dir))
+      lookup(ExtensionQueries.stageRawFrames(spark, dir))()
+        .explain("formatted")
       for (rep <- 1 to reps) {
-        graft.ext.Stages.evict(spark, s"$dir|$stageName")
+        ExtensionQueries.evictStage(spark, dir, stageName)
         Thread.sleep(1000) // drain listener bus before reset
         probe.synchronized { durs.clear(); shuf = 0; gcMs = 0 }
         val t0 = System.nanoTime()

@@ -348,78 +348,6 @@ class ExtSpec extends SparkSpec {
     }
   }
 
-  test("Stages disk tier: artifact survives eviction (new-process " +
-      "warm read), fingerprint change invalidates the disk copy, and " +
-      "empty frames round-trip") {
-    import graft.ext.Stages
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-stages-spec").toFile
-    val prev = sys.props.get("graft.stage.dir")
-    System.setProperty("graft.stage.dir", root.getPath)
-    try {
-      val builds = new java.util.concurrent.atomic.AtomicInteger(0)
-      def build(tag: String) = {
-        builds.incrementAndGet()
-        Seq((1L, tag), (2L, tag)).toDF("id", "tag")
-      }
-      val name = s"extspec-disk-${System.nanoTime()}"
-      val a = Stages.stage(spark, name, fingerprint = 1L)(build("v1"))
-      assert(a.as[(Long, String)].collect().toSet ===
-        Set(1L -> "v1", 2L -> "v1"))
-      assert(builds.get() === 1)
-      // evict simulates a NEW process: the memo cell is gone, so the
-      // next call must come back from DISK without re-running build
-      Stages.evict(spark, name)
-      val b = Stages.stage(spark, name, fingerprint = 1L)(build("v2"))
-      assert(builds.get() === 1,
-        "post-evict call must read the persisted artifact, not rebuild")
-      assert(b.as[(Long, String)].collect().toSet ===
-        Set(1L -> "v1", 2L -> "v1"))
-      // changed fingerprint: rebuilds AND replaces the disk artifact
-      val c = Stages.stage(spark, name, fingerprint = 2L)(build("v3"))
-      assert(builds.get() === 2, "fingerprint change must rebuild")
-      assert(c.as[(Long, String)].collect().toSet ===
-        Set(1L -> "v3", 2L -> "v3"))
-      val dirs = root.listFiles()
-        .filter(_.getName.startsWith(name + "__fp"))
-      assert(dirs.length === 1,
-        s"stale fingerprint dir must be deleted, saw ${dirs.toSeq}")
-      // an EMPTY stage frame must round-trip (schema preserved)
-      val en = s"extspec-disk-empty-${System.nanoTime()}"
-      val e1 = Stages.stage(spark, en, fingerprint = 1L)(
-        Seq((1L, "x")).toDF("id", "t")
-          .filter(org.apache.spark.sql.functions.lit(false)))
-      assert(e1.count() === 0L)
-      assert(e1.columns.toSeq === Seq("id", "t"))
-      Stages.evict(spark, en)
-      val e2 = Stages.stage(spark, en, fingerprint = 1L)(
-        sys.error("empty artifact must be served from disk"))
-      assert(e2.count() === 0L)
-      assert(e2.columns.toSeq === Seq("id", "t"))
-      Stages.evict(spark, name); Stages.evict(spark, en)
-      // crashed-run tmp remnants are reclaimed EVEN behind a
-      // published _SUCCESS (the Staging.publishOnce discipline): a
-      // dead-pid tmp next to the published artifact must vanish on
-      // the next stage() call's fast path, a live-pid one must not
-      val deadTmp = new java.io.File(root,
-        s"${name}__fpdead.tmp-999999999-1")
-      new java.io.File(deadTmp, "part").mkdirs()
-      val liveTmp = new java.io.File(root,
-        s"${name}__fpdead.tmp-${ProcessHandle.current().pid()}-1")
-      liveTmp.mkdirs()
-      Stages.stage(spark, name, fingerprint = 2L)(build("v4"))
-      assert(builds.get() === 2,
-        "published artifact must still serve from disk")
-      assert(!deadTmp.exists(), "dead-pid stage tmp must be swept " +
-        "even when the artifact is already published")
-      assert(liveTmp.exists(), "live-pid stage tmp must survive")
-      Stages.evict(spark, name)
-    } finally prev match {
-      case Some(v) => System.setProperty("graft.stage.dir", v): Unit
-      case None => System.clearProperty("graft.stage.dir"): Unit
-    }
-  }
-
   test("simhashBandPairs under a pathologically hot band bucket: " +
       "exact vs a brute-force reference, and maxBucket bounds the " +
       "expansion") {

@@ -150,47 +150,27 @@ class PlanSpec extends SparkSpec {
   }
 
   test("i2b2_pipeline: every join broadcasts at test scale with no " +
-      "hint when the spine stage is disk-tier backed (the Bench/" +
-      "Verify configuration)") {
+      "hint over the memoized spine stage (the Bench/Verify " +
+      "configuration)") {
     // the joins carry no broadcast() hint (a forced broadcast OOMs at
     // scale instead of degrading to a shuffled hash join). Catalyst
     // must still pick BHJ for every dimension join under the
-    // threshold — which needs the staged spine to carry stats, i.e.
-    // the parquet disk tier Bench and Verify always enable (a bare
-    // localCheckpoint is an ExistingRDD with unknown size, and the
-    // planner correctly refuses to broadcast the unknown).
-    import graft.ext.Stages
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_stageplan").toFile
-    val prev = sys.props.get("graft.stage.dir")
-    System.setProperty("graft.stage.dir", root.getPath)
+    // threshold, with the spine read from its in-session checkpoint.
     def evictBoth(): Unit =
-      Seq("i2b2_spine", "i2b2_hier_last")
-        .foreach(n => Stages.evict(spark, s"$dir|$n"))
+      Seq("i2b2_spine", "i2b2_hier_last").foreach(n =>
+        graft.queries.ExtensionQueries.evictStage(spark, dir, n))
     evictBoth()
-    try {
-      val p = plan("i2b2_pipeline")
-      // ancestor-name resolution broadcasts; nothing degenerates
-      assert(p.contains("BroadcastHashJoin"))
-      assert(!p.contains("CartesianProduct") &&
-        !p.contains("BroadcastNestedLoopJoin"))
-      // the spine is SCANNED from the staged artifact, not recomputed
-      // (the whole point of sharing it with the bugcompat twin)
-      assert(p.contains("graft_stageplan"),
-        s"spine not read from the stage tier:\n$p")
-      // the one shuffle join left is the path render-back: its right
-      // side is the exchange-free groupBy output (co-partitioned on
-      // the join key), and a path dimension is data-scale at 100 TB —
-      // SMJ there is the intended shape, but it must stay the ONLY one
-      assert("SortMergeJoin".r.findAllIn(p).size === 1,
-        s"unexpected extra shuffle join:\n$p")
-    } finally {
-      prev match {
-        case Some(v) => System.setProperty("graft.stage.dir", v): Unit
-        case None => System.clearProperty("graft.stage.dir"): Unit
-      }
-      evictBoth() // later tests rebuild under their own tier config
-    }
+    val p = plan("i2b2_pipeline")
+    // ancestor-name resolution broadcasts; nothing degenerates
+    assert(p.contains("BroadcastHashJoin"))
+    assert(!p.contains("CartesianProduct") &&
+      !p.contains("BroadcastNestedLoopJoin"))
+    // the one shuffle join left is the path render-back: its right
+    // side is the exchange-free groupBy output (co-partitioned on
+    // the join key), and a path dimension is data-scale at 100 TB —
+    // SMJ there is the intended shape, but it must stay the ONLY one
+    assert("SortMergeJoin".r.findAllIn(p).size === 1,
+      s"unexpected extra shuffle join:\n$p")
   }
 
   test("ew_asof_native plans the custom exec with sorted children") {
@@ -930,6 +910,51 @@ class PlanSpec extends SparkSpec {
       // 1-row frame — a second would mean the count join degraded
       assert("BroadcastNestedLoopJoin".r.findAllIn(p).size <= 1,
         s"$q: more than the single-row total cross-join is BNLJ:\n$p")
+    }
+  }
+
+  // -- The stage table ----------------------------------------------
+  // prebuild, evict and the probe surfaces are all derived from one
+  // ordered table; these pin each derived surface to it.
+
+  /** The bench's stage rows, in build order. */
+  private val benchStageRows = Seq("cc_labels", "dsir_domain_scores",
+    "kmeans8_cent", "kmeans8_labels", "pq_codebook", "pq_codes",
+    "pq_adc20", "ivfpq_adc20", "bpe_merges", "bm25_top20", "pr_graph",
+    "copurchase_edges", "shingle_pairs", "events_census", "i2b2_spine",
+    "incr_fp", "incr_bloom", "mm_pixel_blobs", "mm_ahash_blobs",
+    "mm_audio_blobs", "mm_phash_blobs", "mm_video_blobs",
+    "mm_vdup_blobs", "mm_img_feats", "mm_audio_feats",
+    "mm_caption_cues", "mm_video_feats", "bucketed_layout")
+
+  test("stage table: prebuildStages emits the 28 bench rows in build " +
+      "order") {
+    val rows = graft.queries.ExtensionQueries.prebuildStages(spark, dir)
+    assert(rows.map(_._1) === benchStageRows)
+  }
+
+  test("stage table: every DataFrame stage has both a memoized thunk " +
+      "and a raw frame") {
+    import graft.queries.ExtensionQueries.{stageRawFrames, stageThunks}
+    // the bench rows minus the two driver-side artifacts, plus the
+    // hierarchy stage that is built inside the i2b2_spine row
+    val frames = benchStageRows.toSet --
+      Set("incr_bloom", "bucketed_layout") + "i2b2_hier_last"
+    val thunks = stageThunks(spark, dir).map(_._1)
+    assert(thunks.toSet === frames)
+    assert(stageRawFrames(spark, dir).map(_._1) === thunks)
+  }
+
+  test("stage table: evictStages makes the next access rebuild") {
+    import graft.queries.ExtensionQueries.{evictStages, stageThunks}
+    // a memo hit returns the very same checkpointed frame; a rebuild
+    // materializes a new one
+    for (name <- Seq("events_census", "i2b2_hier_last")) {
+      def get() = stageThunks(spark, dir).toMap.apply(name)()
+      val built = get()
+      assert(get() eq built, s"$name: memo hit must not rebuild")
+      evictStages(spark, dir)
+      assert(!(get() eq built), s"$name: evictStages must force a rebuild")
     }
   }
 }
