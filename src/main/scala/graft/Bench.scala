@@ -1,14 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import graft.sources.Staging
 object Bench {
-  /** Thread/partition count of the OFFICIAL session — the single
-    * definition QProbe mirrors, so probe timings stay comparable to
-    * the official figures on any host (a hardcoded 32 in the probe
-    * silently diverged whenever this derivation changed).
-    */
-  private[graft] def cpus: String =
-    sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-
   /** Self-contained-run prep shared by Bench and Verify: wipe the
     * staged format-fixture roots so the invocation computes everything
     * from the parquet inputs.
@@ -23,12 +16,7 @@ object Bench {
     val roots = Seq("target/warc", "target/warc_web",
       "target/jsonl", "target/jsonl_zst", "target/orc", "target/avro")
     if (new java.io.File("build.sbt").isFile)
-      roots.foreach { p =>
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-        }
-        try rm(new java.io.File(p)) catch { case _: Throwable => () }
-      }
+      roots.foreach(p => Staging.deleteTree(new java.io.File(p)))
     else
       System.err.println("[bench] cwd is not the build root (no " +
         "build.sbt); skipping the staged-fixture wipe of " +
@@ -37,7 +25,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = Bench.cpus
     val sfName = sfDir.split('/').last
     // Every bench invocation computes its stages from the parquet
     // inputs (the in-session Stages memo is the only stage tier), so
@@ -49,13 +36,7 @@ object Bench {
     // consumer's first rep and min-of-k strips it, so figures are
     // unchanged — this just makes the run self-contained on disk.
     prepareSelfContainedRun()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     // Warm pass: run EVERY query once at the smallest sf first. The
     // whole-stage codegen cache is keyed on generated source, which is
     // identical across scale factors, so this compiles each plan's
@@ -317,13 +298,6 @@ object Bench {
       latePass += 1
     }
     val stages = stageBest.toSeq.sortBy(_._1)
-    def jstr(s: String): String =
-      s.flatMap {
-        case '\\' => "\\\\"
-        case '"' => "\\\""
-        case c if c < ' ' => "\\u%04x".format(c.toInt)
-        case c => c.toString
-      }.mkString("\"", "", "\"")
     // The harness keeps only the LAST ~2k chars of output, so the line
     // puts the headline fields AFTER the per-query map, sorted
     // fastest-first so the slowest — most informative — queries sit
@@ -341,18 +315,19 @@ object Bench {
     def sec2(v: Double): String =
       String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
     val qs = results.sortBy(_._2)
-      .map { case (k, v, _, _) => jstr(k) + ":" + sec2(v) }
+      .map { case (k, v, _, _) => Json.str(k) + ":" + sec2(v) }
       .mkString("{", ",", "}")
-    val errs = (stageErrs.map { case (k, e) => jstr(k) + ":" + jstr(e) } ++
-      results.collect { case (k, _, Some(e), _) => jstr(k) + ":" + jstr(e) })
+    val errs = (stageErrs ++
+        results.collect { case (k, _, Some(e), _) => (k, e) })
+      .map { case (k, e) => Json.str(k) + ":" + Json.str(e) }
       .mkString("{", ",", "}")
     // queries whose figure had expectation/spread-triggered extra
     // samples behind it, with the extra-rep count — the JSON record
     // of the retry protocol (stderr notes don't survive archiving)
     val retriedJson = results.collect { case (k, _, _, r) if r > 0 =>
-      jstr(k) + ":" + r }.mkString("{", ",", "}")
+      Json.str(k) + ":" + r }.mkString("{", ",", "}")
     val stagesJson = stages
-      .map { case (k, v) => jstr(k) + ":" + sec2(v) }
+      .map { case (k, v) => Json.str(k) + ":" + sec2(v) }
       .mkString("{", ",", "}")
     // Total = per-query mins + the one-time shared-stage builds, so
     // the memoized work is still paid for in the headline number.

@@ -2,8 +2,8 @@ package graft
 
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
+import graft.tools.TaskStats
+import graft.tools.TaskStats.fmtBytes
 
 /** 1× → 10× → 100× growth-exponent measurement (dev tool): times the
   * heavy shared stages (`cc_labels`, `pr_graph`, `shingle_pairs`) and
@@ -28,51 +28,12 @@ import org.apache.spark.sql.SparkSession
   */
 object ScaleExponents {
 
-  /** Per-run task telemetry collected off SparkListenerTaskEnd. */
-  private final class TaskProbe extends SparkListener {
-    val durs = ArrayBuffer.empty[Long] // ms
-    var shufRead = 0L
-    var shufWrite = 0L
-    var gcMs = 0L
-    override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
-      synchronized {
-        val m = t.taskMetrics
-        if (m != null) {
-          durs += t.taskInfo.duration
-          shufRead += m.shuffleReadMetrics.remoteBytesRead +
-            m.shuffleReadMetrics.localBytesRead
-          shufWrite += m.shuffleWriteMetrics.bytesWritten
-          gcMs += m.jvmGCTime
-        }
-      }
-    def reset(): Unit = synchronized {
-      durs.clear(); shufRead = 0; shufWrite = 0; gcMs = 0
-    }
-    def snapshot: (Int, Double, Double, Double, Double, Long, Long) =
-      synchronized {
-        val d = durs.toArray.sorted
-        val sum = d.map(_.toDouble).sum / 1000.0
-        val max = if (d.isEmpty) 0.0 else d.last / 1000.0
-        val p50 = if (d.isEmpty) 0.0 else d(d.length / 2) / 1000.0
-        (d.length, sum, max, p50, gcMs / 1000.0, shufRead, shufWrite)
-      }
-  }
-
-  private def fmtB(b: Long): String =
-    if (b >= (1L << 30)) f"${b / (1024.0 * 1024 * 1024)}%.2f GiB"
-    else f"${b / (1024.0 * 1024)}%.1f MiB"
-
   def main(args: Array[String]): Unit = {
     val srcDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val reps = args.lift(1).map(_.toInt).getOrElse(2)
     val probeRuns = args.lift(2).map(_.toInt).getOrElse(6)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val probe = new TaskProbe
-    spark.sparkContext.addSparkListener(probe)
+    val spark = Session.local()
+    val stats = TaskStats.attach(spark.sparkContext)
 
     ScaleFixtures.ensure(spark, srcDir, "target/sf1", 10)
     ScaleFixtures.ensure(spark, srcDir, "target/sf10", 100)
@@ -126,10 +87,8 @@ object ScaleExponents {
           scala.collection.mutable.LinkedHashMap.empty)
         .put(tier, (ts, rows))
 
-    // shingle probe rows: (tier, run, wall, tasks, sumTask, maxTask,
-    // p50Task, gc, shufRead, shufWrite, rows)
-    val probeRows = ArrayBuffer.empty[(String, Int, Double, Int,
-      Double, Double, Double, Double, Long, Long, Long)]
+    // shingle probe rows: (run, wall, task stats)
+    val probeRows = ArrayBuffer.empty[(Int, Double, TaskStats.Snapshot)]
 
     for ((tier, dir) <- tiers) {
       val thunks = graft.queries.ExtensionQueries.stageThunks(spark, dir)
@@ -208,18 +167,16 @@ object ScaleExponents {
         for (run <- 1 to probeRuns) {
           graft.queries.ExtensionQueries.evictStage(spark, dir,
             "shingle_pairs")
-          Thread.sleep(1000) // drain listener bus before reset
-          probe.reset()
+          stats.reset()
           val t0 = System.nanoTime()
           val rows = thunks("shingle_pairs")().count()
           val wall = (System.nanoTime() - t0) / 1e9
-          Thread.sleep(1000) // let async task-end events land
-          val (n, sum, max, p50, gc, sr, sw) = probe.snapshot
+          val st = stats.snapshot
           println(f"[scale] probe run $run: wall=$wall%.2f s " +
-            f"tasks=$n sum=$sum%.1f max=$max%.2f p50=$p50%.2f " +
-            f"gc=$gc%.1f read=${fmtB(sr)} write=${fmtB(sw)}")
-          probeRows += ((tier, run, wall, n, sum, max, p50, gc, sr,
-            sw, rows))
+            f"tasks=${st.tasks} sum=${st.sumS}%.1f max=${st.maxS}%.2f " +
+            f"p50=${st.p50S}%.2f gc=${st.gcS}%.1f " +
+            f"read=${fmtBytes(st.shufRead)} write=${fmtBytes(st.shufWrite)}")
+          probeRows += ((run, wall, st))
         }
       }
     }
@@ -229,8 +186,9 @@ object ScaleExponents {
     sb ++= "# SF10 scale exponents (1x -> 10x -> 100x)\n\n"
     sb ++= s"Replica-scaled tiers of sf0.1 (`graft.ScaleFixtures`): " +
       s"10x = 50k docs / 6M lineitem, 100x = 500k docs / 60M " +
-      s"lineitem. local[32], min-of-$reps fresh builds per stage " +
-      s"(memo evicted each rep), ${java.time.LocalDate.now()}. " +
+      s"lineitem. ${spark.sparkContext.master}, min-of-$reps fresh " +
+      s"builds per stage (memo evicted each rep), " +
+      s"${java.time.LocalDate.now()}. " +
       "alpha = log10 of the time ratio per 10x data hop; 1.0 is " +
       "linear, <1 sub-linear (fixed overheads amortizing), >1 " +
       "super-linear.\n\n"
@@ -256,31 +214,20 @@ object ScaleExponents {
     sb ++= "| run | wall s | tasks | sum task s | max task s | " +
       "p50 task s | gc s | shuffle read | shuffle write |\n"
     sb ++= "|---|---|---|---|---|---|---|---|---|\n"
-    for ((_, run, wall, n, sum, max, p50, gc, sr, sw, _) <- probeRows)
-      sb ++= f"| $run | $wall%.2f | $n | $sum%.1f | $max%.2f | " +
-        f"$p50%.2f | $gc%.1f | ${fmtB(sr)} | ${fmtB(sw)} |\n"
+    for ((run, wall, st) <- probeRows)
+      sb ++= f"| $run | $wall%.2f | ${st.tasks} | ${st.sumS}%.1f | " +
+        f"${st.maxS}%.2f | ${st.p50S}%.2f | ${st.gcS}%.1f | " +
+        f"${fmtBytes(st.shufRead)} | ${fmtBytes(st.shufWrite)} |\n"
     if (probeRows.nonEmpty) {
-      val walls = probeRows.map(_._3)
-      val sums = probeRows.map(_._5)
+      val walls = probeRows.map(_._2)
+      val sums = probeRows.map(_._3.sumS)
       sb ++= f"\nwall spread ${walls.max / walls.min}%.2fx; " +
         f"summed-task-time spread ${sums.max / sums.min}%.2fx; " +
         "shuffle bytes per run as tabled. If wall varies while " +
         "summed task time and shuffle bytes hold, the spread is " +
         "ambient (scheduler/IO/GC), not data skew.\n"
     }
-    // preserve hand-written analysis below the marker (same contract
-    // as SF1_SMOKE.md)
-    val marker = "<!-- MANUAL ANALYSIS -->"
-    val path = java.nio.file.Paths.get("SF10_SMOKE.md")
-    val manual =
-      if (java.nio.file.Files.exists(path)) {
-        val prev = new String(
-          java.nio.file.Files.readAllBytes(path), "UTF-8")
-        val i = prev.indexOf(marker)
-        if (i >= 0) prev.substring(i) else s"$marker\n"
-      } else s"$marker\n"
-    sb ++= "\n" + manual
-    java.nio.file.Files.write(path, sb.toString.getBytes("UTF-8"))
+    ScaleFixtures.writeRecord("SF10_SMOKE.md", sb.toString)
     println("[scale] wrote SF10_SMOKE.md")
     spark.stop()
   }

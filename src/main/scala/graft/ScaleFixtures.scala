@@ -1,5 +1,7 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -23,6 +25,24 @@ import org.apache.spark.sql.functions._
   * overflow an int-typed source column.
   */
 object ScaleFixtures {
+
+  /** Writes a scaled-run record (SF1_SMOKE.md, SF10_SMOKE.md): the
+    * generated `body`, then the earlier record's text from the
+    * `<!-- MANUAL ANALYSIS -->` marker on — the generator owns only the
+    * header and tables, so a re-run never clobbers the hand-written
+    * cross-run analysis.
+    */
+  def writeRecord(path: String, body: String): Unit = {
+    val marker = "<!-- MANUAL ANALYSIS -->"
+    val p = Paths.get(path)
+    val manual =
+      if (Files.exists(p)) {
+        val prev = new String(Files.readAllBytes(p), "UTF-8")
+        val i = prev.indexOf(marker)
+        if (i >= 0) prev.substring(i) else s"$marker\n"
+      } else s"$marker\n"
+    Files.write(p, (body + "\n" + manual).getBytes("UTF-8"))
+  }
 
   /** Generate the scaled tier into `outDir` unless already committed.
     * Commit sentinel = the _SUCCESS marker of the LAST table each

@@ -25,11 +25,7 @@ object Sf1Smoke {
     val srcDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val outDir = args.lift(1).getOrElse("target/sf1")
     val factor = 10
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
 
     // fixture generation shared with ScaleExponents (100× tier)
     ScaleFixtures.ensure(spark, srcDir, outDir, factor)
@@ -174,7 +170,8 @@ object Sf1Smoke {
     sb ++= "# SF1 scale smoke\n\n"
     sb ++= s"10x the sf0.1 documents/embeddings fixtures (50k docs, " +
       s"20k vectors, replica-salted — see `graft.Sf1Smoke`), " +
-      s"local[32], min-of-2 reps per run, ${java.time.LocalDate.now()}. " +
+      s"${spark.sparkContext.master}, min-of-2 reps per run, " +
+      s"${java.time.LocalDate.now()}. " +
       "`best-of-N` = the minimum across all N recorded smoke runs on " +
       "this machine (target/sf1_minima.json): same-code ambient drift " +
       "swings single samples 2-12x, so cross-run minima are the " +
@@ -189,20 +186,7 @@ object Sf1Smoke {
     sb ++= "No query failed or spilled to OOM; empty plan-flag column = " +
       "no cartesian product and no unpartitioned window under AQE at " +
       "10x input.\n"
-    // Preserve the hand-written analysis below the marker — the
-    // generator owns only the header + table; re-running the smoke
-    // must not clobber the cross-run narrative.
-    val marker = "<!-- MANUAL ANALYSIS -->"
-    val path = java.nio.file.Paths.get("SF1_SMOKE.md")
-    val manual =
-      if (java.nio.file.Files.exists(path)) {
-        val prev = new String(java.nio.file.Files.readAllBytes(path),
-          "UTF-8")
-        val i = prev.indexOf(marker)
-        if (i >= 0) prev.substring(i) else s"$marker\n"
-      } else s"$marker\n"
-    sb ++= "\n" + manual
-    java.nio.file.Files.write(path, sb.toString.getBytes("UTF-8"))
+    ScaleFixtures.writeRecord("SF1_SMOKE.md", sb.toString)
     println(s"[sf1] wrote SF1_SMOKE.md (total ${wall.round} s)")
     spark.stop()
   }

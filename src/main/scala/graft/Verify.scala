@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.sources.Staging
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -8,19 +8,14 @@ object Verify {
     val sfDir = args(0); val outDir = args(1)
     // dev convenience: trailing args subset the queries to re-dump
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // Staged format fixtures wiped, same as Bench: an oracle run must
     // compute every input from the parquet files — never read one a
     // previous run left behind. A subsetted dev re-dump may
     // legitimately reuse staged fixtures, so it skips the wipe.
     if (only.isEmpty) Bench.prepareSelfContainedRun()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // Bench's session, so the oracle dump runs at the parallelism the
+    // timings do
+    val spark = Session.local()
     new java.io.File(outDir).mkdirs()
     var failed = List.empty[String]
     SparkEntry.queries
@@ -41,11 +36,7 @@ object Verify {
         // cause), a leftover dump from an earlier run would make the
         // compare pass this failing query against old output — the
         // same regression-as-clean-pass trap, one level deeper.
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
-        }
-        try rm(new java.io.File(s"$outDir/$name"))
-        catch { case _: Throwable => () }
+        Staging.deleteTree(new java.io.File(s"$outDir/$name"))
         try {
           import spark.implicits._
           Seq(s"${e.getClass.getSimpleName}: ${Option(e.getMessage)
@@ -57,20 +48,12 @@ object Verify {
     if (failed.nonEmpty)
       System.err.println(s"[verify] ${failed.size} FAILED: ${
         failed.sorted.mkString(", ")}")
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    // every control char escaped: a tab or CR in an oracle's SQL would
+    // otherwise fail the compare's JSON parse and silently zero the
+    // correctness check
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${Json.str(k)}: ${Json.str(v)}" }
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

@@ -584,11 +584,8 @@ object DedupOps {
       // recomputed once per branch. An explicit persist instead of the
       // checkpoint measured SLOWER (InMemoryRelation blocks the
       // exchange-reuse match inside each step).
-      val tR = System.nanoTime()
       val half = ckpt(starStep(e, large = true, dedup = false))
-      val tH = System.nanoTime()
       val (next, n, x) = ckptCounted(starStep(half, large = false))
-      val tN = System.nanoTime()
       // both sides are distinct sets: equal size + equal xor-checksum
       // gate the EXACT probe — an empty anti join (strictly cheaper
       // than `except`, which would re-distinct both already-distinct
@@ -604,9 +601,6 @@ object DedupOps {
         .getOrElse(false)
       converged = n == prevCount && !checksumsDiffer &&
         next.join(e, Seq("a", "b"), "left_anti").isEmpty
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        println(f"[cc] iter=$iter n=$n half=${(tH - tR) / 1e9}%.3f " +
-          f"next=${(tN - tH) / 1e9}%.3f probe=${(System.nanoTime() - tN) / 1e9}%.3f")
       // drop superseded round state (a 40-round run would otherwise
       // hold every round's blocks) AND its reliable-checkpoint files —
       // the context cleaner does not remove those under default config,

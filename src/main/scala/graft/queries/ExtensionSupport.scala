@@ -221,12 +221,7 @@ private[queries] object ExtensionSupport {
       .filter(f => f.getName.startsWith("graft_bucketed_") &&
         f.getName != s"graft_bucketed_$sfx" &&
         f.lastModified() < System.currentTimeMillis() - dayMs)
-      .foreach { f =>
-        def rm(x: java.io.File): Unit = {
-          Option(x.listFiles()).foreach(_.foreach(rm)); x.delete()
-        }
-        try rm(f) catch { case _: Throwable => () }
-      }
+      .foreach(graft.sources.Staging.deleteTree)
     val tmp = System.getProperty("java.io.tmpdir") +
       s"/graft_bucketed_$sfx"
     BucketedTables.writeBucketed(

@@ -7,6 +7,8 @@ import java.util.zip.{Deflater, Inflater}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 
+import graft.Json
+
 /** Avro Object Container File ingestion — the ROW-oriented
   * interchange sibling of [[OrcSource]]/[[JsonlSource]] (Kafka
   * pipelines and schema-registry shops publish Avro where lakehouses
@@ -108,17 +110,14 @@ object AvroSource {
     * the canonical Avro idiom for optional columns.
     */
   private[sources] def schemaJson(name: String, schema: StructType): String = {
-    def q(s: String) = "\"" + s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"; case c => c.toString
-    } + "\""
     val fields = schema.fields.map { f =>
       val t =
-        if (f.nullable) s"""["null", ${q(avroType(f.dataType))}]"""
-        else q(avroType(f.dataType))
-      s"""{"name": ${q(f.name)}, "type": $t""" +
+        if (f.nullable) s"""["null", ${Json.str(avroType(f.dataType))}]"""
+        else Json.str(avroType(f.dataType))
+      s"""{"name": ${Json.str(f.name)}, "type": $t""" +
         (if (f.nullable) """, "default": null}""" else "}")
     }
-    s"""{"type": "record", "name": ${q(name)}, """ +
+    s"""{"type": "record", "name": ${Json.str(name)}, """ +
       s""""fields": [${fields.mkString(", ")}]}"""
   }
 

@@ -20,7 +20,7 @@ private[graft] object Staging {
   private[sources] def safeName(name: String): String =
     name.map(c => if (c.isLetterOrDigit || c == '.' || c == '-') c else '_')
 
-  private[sources] def deleteTree(f: java.io.File): Unit = {
+  private[graft] def deleteTree(f: java.io.File): Unit = {
     if (f.isDirectory)
       Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteTree)
     f.delete(): Unit

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Registry-wide physical-plan census (round 19 dev tool): for every
   * declared query (and optionally every shared stage), print the
   * count of Exchange / SortAggregate / ObjectHashAggregate /
@@ -18,14 +16,7 @@ object PlanCensus {
   def main(args: Array[String]): Unit = {
     val sfDir = args.lift(0).getOrElse("/root/testdata/sf0.01")
     val prefix = args.lift(1).getOrElse("")
-    val cpus = graft.Bench.cpus
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local()
     val rows = graft.SparkEntry.queries.toSeq
       .filter(_._1.startsWith(prefix))
       .sortBy(_._1)

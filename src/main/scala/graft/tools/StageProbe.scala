@@ -1,9 +1,6 @@
 package graft.tools
 
-import scala.collection.mutable.ArrayBuffer
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 import graft.queries.ExtensionQueries
 
@@ -20,8 +17,7 @@ import graft.queries.ExtensionQueries
   *
   * `runMain graft.tools.StageProbe <stage> <reps> <dir1,dir2,...>`
   * Dev-loop tool only; official figures come from [[graft.Bench]] /
-  * [[graft.ScaleExponents]]. Session config mirrors Bench
-  * ([[graft.Bench.cpus]]) for the same reason QProbe's does.
+  * [[graft.ScaleExponents]]; the session is Bench's ([[graft.Session]]).
   */
 object StageProbe {
   def main(args: Array[String]): Unit = {
@@ -29,30 +25,8 @@ object StageProbe {
     val reps = args.lift(1).map(_.toInt).getOrElse(3)
     val dirs = args.lift(2).map(_.split(',').toSeq)
       .getOrElse(Seq("target/sf1", "target/sf10"))
-    val cpus = graft.Bench.cpus
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val durs = ArrayBuffer.empty[Long]
-    var shuf = 0L
-    var gcMs = 0L
-    val probe = new SparkListener {
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
-        synchronized {
-          val m = t.taskMetrics
-          if (m != null) {
-            durs += t.taskInfo.duration
-            shuf += m.shuffleReadMetrics.remoteBytesRead +
-              m.shuffleReadMetrics.localBytesRead
-            gcMs += m.jvmGCTime
-          }
-        }
-    }
-    spark.sparkContext.addSparkListener(probe)
+    val spark = graft.Session.local()
+    val stats = TaskStats.attach(spark.sparkContext)
     for (dir <- dirs) {
       def lookup(all: Seq[(String, () => DataFrame)]) =
         all.collectFirst { case (`stageName`, b) => b }
@@ -63,19 +37,15 @@ object StageProbe {
         .explain("formatted")
       for (rep <- 1 to reps) {
         ExtensionQueries.evictStage(spark, dir, stageName)
-        Thread.sleep(1000) // drain listener bus before reset
-        probe.synchronized { durs.clear(); shuf = 0; gcMs = 0 }
+        stats.reset()
         val t0 = System.nanoTime()
         val rows = build().count()
         val wall = (System.nanoTime() - t0) / 1e9
-        Thread.sleep(1000) // let async task-end events land
-        val (n, sum, max) = probe.synchronized {
-          (durs.length, durs.sum / 1000.0,
-            if (durs.isEmpty) 0.0 else durs.max / 1000.0)
-        }
+        val st = stats.snapshot
         println(f"[stageprobe] $dir $stageName rep $rep: " +
-          f"wall=$wall%.2f s tasks=$n sum=$sum%.1f max=$max%.2f " +
-          f"gc=${gcMs / 1000.0}%.1f shufRead=${shuf / (1024.0 * 1024)}%.1f MiB " +
+          f"wall=$wall%.2f s tasks=${st.tasks} sum=${st.sumS}%.1f " +
+          f"max=${st.maxS}%.2f gc=${st.gcS}%.1f " +
+          f"shufRead=${TaskStats.fmtBytes(st.shufRead)} " +
           f"rows=$rows")
       }
     }
