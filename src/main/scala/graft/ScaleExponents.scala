@@ -184,9 +184,10 @@ object ScaleExponents {
     // ---- report --------------------------------------------------
     val sb = new StringBuilder
     sb ++= "# SF10 scale exponents (1x -> 10x -> 100x)\n\n"
-    sb ++= s"Replica-scaled tiers of sf0.1 (`graft.ScaleFixtures`): " +
-      s"10x = 50k docs / 6M lineitem, 100x = 500k docs / 60M " +
-      s"lineitem. ${spark.sparkContext.master}, min-of-$reps fresh " +
+    sb ++= s"Replica-scaled tiers of `$srcDir` (`graft.ScaleFixtures`): " +
+      tiers.map { case (t, d) => s"$t = ${ScaleFixtures.sizes(spark, d)}" }
+        .mkString("", ", ", ". ") +
+      s"${spark.sparkContext.master}, min-of-$reps fresh " +
       s"builds per stage (memo evicted each rep), " +
       s"${java.time.LocalDate.now()}. " +
       "alpha = log10 of the time ratio per 10x data hop; 1.0 is " +

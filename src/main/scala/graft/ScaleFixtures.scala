@@ -44,6 +44,15 @@ object ScaleFixtures {
     Files.write(p, (body + "\n" + manual).getBytes("UTF-8"))
   }
 
+  /** A tier's size for a record header, counted rather than assumed
+    * (the tiers scale whatever source dir they were generated from):
+    * `"<n> documents / <n> embeddings / <n> lineitem"`.
+    */
+  def sizes(spark: SparkSession, dir: String): String =
+    Seq("documents", "embeddings", "lineitem").map { t =>
+      s"${graft.sources.Tables.load(spark, dir, t).count()} $t"
+    }.mkString(" / ")
+
   /** Generate the scaled tier into `outDir` unless already committed.
     * Commit sentinel = the _SUCCESS marker of the LAST table each
     * generator writes: Spark creates the output DIRECTORY at write

@@ -168,8 +168,9 @@ object Sf1Smoke {
 
     val sb = new StringBuilder
     sb ++= "# SF1 scale smoke\n\n"
-    sb ++= s"10x the sf0.1 documents/embeddings fixtures (50k docs, " +
-      s"20k vectors, replica-salted — see `graft.Sf1Smoke`), " +
+    sb ++= s"10x the `$srcDir` fixtures " +
+      s"(${ScaleFixtures.sizes(spark, outDir)}, replica-salted — see " +
+      "`graft.Sf1Smoke`), " +
       s"${spark.sparkContext.master}, min-of-2 reps per run, " +
       s"${java.time.LocalDate.now()}. " +
       "`best-of-N` = the minimum across all N recorded smoke runs on " +

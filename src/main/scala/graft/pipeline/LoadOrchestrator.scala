@@ -13,17 +13,22 @@ import org.apache.spark.sql.functions._
   *
   * Flow mirrors the reference: probe table (L1) → create if missing,
   * else read MIN(IMPORT_DATE) and stamp it onto every new row (L2) →
-  * batched append (L3, Spark's jdbc writer batches per partition) →
-  * verification count keyed on the run timestamp (L4) → CSV export of
-  * the inserted rows (L5). Transactionality (L6): the reference holds
-  * ONE connection and `rollback()`s everything on failure
-  * (Angelo_ETL_Task.py:366-374); Spark's jdbc write commits per
-  * partition, so a mid-write failure leaves the already-committed
-  * partitions behind. [[load]] restores the reference's effective
-  * atomicity with a compensating `DELETE ... WHERE UPDATE_DATE =
-  * runTs` — the run timestamp uniquely keys the run (that is exactly
-  * how L4 verifies), so the delete removes precisely this run's
-  * partial rows and the original failure is rethrown.
+  * batched append (L3, Spark's jdbc writer batches per partition, 1000
+  * rows per batch by default) → verification count keyed on the run
+  * timestamp (L4) → CSV export of the inserted rows (L5).
+  *
+  * Transactionality (L6): the reference holds ONE connection and
+  * `rollback()`s everything on failure (Angelo_ETL_Task.py:366-374).
+  * [[load]] is the one load path: Spark's jdbc write commits per
+  * partition, so a failure leaves the already-committed partitions
+  * behind, and a compensating `DELETE ... WHERE UPDATE_DATE = runTs`
+  * (plus a `DROP TABLE` when this run created the table) restores the
+  * reference's effective atomicity — the run timestamp uniquely keys
+  * the run (that is exactly how L4 verifies), so the delete removes
+  * precisely this run's partial rows and the original failure is
+  * rethrown. A driver-collect single-transaction twin would only suit
+  * dimension-sized frames written through one connection; no caller
+  * needed it, so there is none.
   */
 object LoadOrchestrator {
 
@@ -130,152 +135,99 @@ object LoadOrchestrator {
 
   /** Run the full load bracket.
     *
-    * @param df        25-column transform output (string run timestamps)
-    * @param runTs     the run's shared timestamp string (F11)
-    * @param csvOut    optional L5 export path (written with header,
-    *                  mirroring the reference's COPY ... WITH CSV HEADER)
-    * @param strictTxn opt-in EXACT twin of the reference's global
-    *                  transaction (Angelo_ETL_Task.py:366-374): ONE
-    *                  driver-side connection with autocommit off runs
-    *                  DDL + every insert + the L4 verify, commits once
-    *                  at the end, and `rollback()`s on ANY failure —
-    *                  a killed run observes ZERO rows, with no
-    *                  compensating-delete window. The price is the
-    *                  reference's own shape: rows collect to the
-    *                  driver and write through one connection, so it
-    *                  is for dimension-table-scale loads
-    *                  ([[StrictMaxRows]] guard) — the default
-    *                  distributed path with its compensating delete
-    *                  is the at-scale mode.
+    * @param df     25-column transform output (string run timestamps)
+    * @param runTs  the run's shared timestamp string (F11)
+    * @param csvOut optional L5 export path (written with header,
+    *               mirroring the reference's COPY ... WITH CSV HEADER)
     */
   def load(df: DataFrame, url: String, table: String, props: Properties,
-           runTs: String, csvOut: Option[String] = None,
-           batchSize: Int = 1000, strictTxn: Boolean = false,
-           strictMaxRows: Int = StrictMaxRows): LoadReport = {
-    if (strictTxn)
-      return loadStrict(df, url, table, props, runTs, csvOut, batchSize,
-        strictMaxRows)
-    val (created, importDate) = withConnection(url, props) { conn =>
-      if (!tableExists(conn, table)) {
-        val st = conn.createStatement()
-        try st.executeUpdate(i2b2Ddl(table)) finally st.close()
-        (true, None)
-      } else (false, firstImportDate(conn, table))
-    }
-
+           runTs: String, csvOut: Option[String] = None): LoadReport = {
+    val runInstant = runInstantOf(df, runTs)
     val typed = castRunTimestamps(df)
-    val stamped = importDate match {
-      case Some(ts) => typed.withColumn("IMPORT_DATE", lit(ts))
-      case None => typed
-    }
-
-    val toWrite = stamped.cache()
-    val writeProps = new Properties()
-    writeProps.putAll(props)
-    writeProps.setProperty("batchsize", batchSize.toString)
-
-    // The zero-trace invariant starts AT the CREATE, not at the first
-    // insert: toWrite.count() below executes the whole ETL transform,
-    // and runInstantOf/the collision probe touch the driver and the
-    // DB — a failure in ANY of them previously left the empty table
-    // this run created (plus the cached frame) behind, exactly the
-    // state the compensation bracket's own comment says a retry or an
-    // existence-probing monitor must never see. Nothing is written
-    // yet, so the cleanup here is drop-if-created + unpersist — no
-    // compensating delete.
-    val (rows, runInstant) =
-      try {
-        val n = toWrite.count()
-        val ri = runInstantOf(df, runTs)
-        // runTs uniquely keys the run — a hard caller contract,
-        // because both L4's verify and L6's compensating delete
-        // select on it. The timestamp has 1-second resolution, so a
-        // RETRIED load could silently share it and a failure would
-        // then delete the earlier run's committed rows — fail fast
-        // instead of writing. NOTE this check-then-act probe only
-        // guards sequential retries: two loads racing the probe both
-        // read 0 and both write. Concurrent loads need an external
-        // mutex or a unique-constrained marker row — out of scope
-        // here, matching the reference's single-process assumption
-        // (Angelo_ETL_Task.py runs one load at a time).
-        val preExisting = withConnection(url, props) { conn =>
-          if (created) 0L else countRowsAt(conn, table, ri)
-        }
+    // One driver connection serves L1, L2, the collision probe and the
+    // L4 verify; every DB check that can refuse the run runs before
+    // the first Spark job.
+    withConnection(url, props) { conn =>
+      val created = !tableExists(conn, table)
+      val importDate =
+        if (created) {
+          val st = conn.createStatement()
+          try st.executeUpdate(i2b2Ddl(table)) finally st.close()
+          None
+        } else firstImportDate(conn, table)
+      // runTs uniquely keys the run — a hard caller contract, because
+      // both L4's verify and L6's compensating delete select on it. The
+      // timestamp has 1-second resolution, so a RETRIED load could
+      // silently share it and a failure would then delete the earlier
+      // run's committed rows — fail fast instead of writing. NOTE this
+      // check-then-act probe only guards sequential retries: two loads
+      // racing the probe both read 0 and both write. Concurrent loads
+      // need an external mutex or a unique-constrained marker row —
+      // out of scope here, matching the reference's single-process
+      // assumption (Angelo_ETL_Task.py runs one load at a time).
+      if (!created) {
+        val preExisting = countRowsAt(conn, table, runInstant)
         if (preExisting > 0)
           throw new IllegalStateException(
             s"run timestamp collision: $preExisting rows with " +
               s"UPDATE_DATE = $runTs already exist in $table — " +
               "refusing to write (a failure rollback could not be " +
               "scoped to this run)")
-        (n, ri)
+      }
+      val toWrite = importDate
+        .fold(typed)(ts => typed.withColumn("IMPORT_DATE", lit(ts)))
+      // L3–L6 in ONE compensation bracket: toWrite.count() runs the
+      // whole ETL transform, per-partition commits mean a mid-write
+      // failure leaves committed partitions behind, and the
+      // reference's single-connection transaction rolls back on ANY
+      // failure of the load step — so a failed transform, append, L4
+      // verify or L5 export all trigger the compensating delete (a run
+      // whose CSV could not be written is a failed run, not a committed
+      // one). Before any insert the delete matches nothing: the
+      // collision probe above showed no row carries this instant.
+      try {
+        val rows = toWrite.cache().count()
+        toWrite.write.mode(SaveMode.Append).jdbc(url, table, props)
+
+        // L4: verify against the DB, keyed on this run's UPDATE_DATE.
+        val verified = countRowsAt(conn, table, runInstant)
+
+        // L5: CSV export of the inserted rows (same content by
+        // construction — no DB round-trip needed).
+        csvOut.foreach(p =>
+          toWrite.coalesce(1).write.option("header", "true")
+            .mode(SaveMode.Overwrite).csv(p))
+
+        LoadReport(created, importDate, rows, verified)
       } catch {
         case e: Throwable =>
-          try {
-            if (created) withConnection(url, props) { conn =>
-              val st = conn.createStatement()
-              try st.executeUpdate(s"DROP TABLE $table")
-              finally st.close()
+          // a fresh connection: cleanup must still run when the
+          // bracket's own connection is what failed
+          try withConnection(url, props) { c =>
+            val ps = c.prepareStatement(
+              s"DELETE FROM $table WHERE UPDATE_DATE = ?")
+            try { ps.setTimestamp(1, runInstant); ps.executeUpdate() }
+            finally ps.close()
+            // a table THIS run created is also this run's effect: the
+            // reference's single-transaction rollback undoes its
+            // CREATE TABLE too (transactional DDL), so a failed first
+            // load must leave zero trace — not an empty table that a
+            // retry or an existence-probing monitor then misreads
+            if (created) {
+              val st = c.createStatement()
+              try st.executeUpdate(s"DROP TABLE $table") finally st.close()
             }
           } catch { case c: Throwable => e.addSuppressed(c) }
-          finally toWrite.unpersist()
           throw e
-      }
-
-    // L3–L6 in ONE compensation bracket: per-partition commits mean a
-    // mid-write failure leaves committed partitions behind, and the
-    // reference's single-connection transaction rolls back on ANY
-    // failure of the load step — so the L4 verify and the L5 CSV
-    // export must also trigger the compensating delete (a run whose
-    // CSV could not be written is a failed run, not a committed one).
-    try {
-      toWrite.write.mode(SaveMode.Append).jdbc(url, table, writeProps)
-
-      // L4: verify against the DB, keyed on this run's UPDATE_DATE.
-      val verified = withConnection(url, props)(
-        countRowsAt(_, table, runInstant))
-
-      // L5: CSV export of the inserted rows (same content by
-      // construction — no DB round-trip needed).
-      csvOut.foreach(p =>
-        toWrite.coalesce(1).write.option("header", "true")
-          .mode(SaveMode.Overwrite).csv(p))
-      toWrite.unpersist()
-
-      LoadReport(created, importDate, rows, verified)
-    } catch {
-      case e: Throwable =>
-        try withConnection(url, props) { conn =>
-          val ps = conn.prepareStatement(
-            s"DELETE FROM $table WHERE UPDATE_DATE = ?")
-          try { ps.setTimestamp(1, runInstant); ps.executeUpdate() }
-          finally ps.close()
-          // a table THIS run created is also this run's effect: the
-          // reference's single-transaction rollback undoes its
-          // CREATE TABLE too (transactional DDL), so a failed first
-          // load must leave zero trace — not an empty table that a
-          // retry or an existence-probing monitor then misreads
-          if (created) {
-            val st = conn.createStatement()
-            try st.executeUpdate(s"DROP TABLE $table") finally st.close()
-          }
-        } catch { case c: Throwable => e.addSuppressed(c) }
-        finally toWrite.unpersist()
-        throw e
+      } finally toWrite.unpersist()
     }
   }
-
-  /** Driver-side row cap for [[load]]'s strict mode: collecting more
-    * than this refuses loudly. The i2b2 metadata dimension the
-    * reference loads is ~10⁵ rows; a fact-table-sized frame through
-    * one connection is a misuse of the mode, not a tuning problem.
-    */
-  val StrictMaxRows: Int = 1000000
 
   /** to_timestamp parsed runTs in the SESSION timezone; binding
     * Timestamp.valueOf (JVM-default wall clock) would shift the probe
     * whenever the two zones differ — convert through the session zone
-    * to the same instant Spark wrote. Used by the L4 verify, the L6
-    * compensating delete, and strict mode's probes.
+    * to the same instant Spark wrote. Used by the collision probe, the
+    * L4 verify and the L6 compensating delete.
     */
   private def runInstantOf(df: DataFrame, runTs: String): Timestamp = {
     val sessionZone = java.time.ZoneId.of(
@@ -286,98 +238,5 @@ object LoadOrchestrator {
         java.time.format.DateTimeFormatter
           .ofPattern("dd-MM-yyyy HH:mm:ss"))
         .atZone(sessionZone).toInstant)
-  }
-
-  /** Strict global-transaction load (see [[load]]'s `strictTxn`):
-    * the reference's single-connection all-or-nothing bracket,
-    * byte-for-byte in effect — autocommit off, DDL + batched inserts
-    * + L4 verify + L5 export inside ONE transaction, `commit()` only
-    * after everything succeeded, `rollback()` on any failure
-    * (Angelo_ETL_Task.py:366-374). The L4 verify runs on the SAME
-    * connection, so it counts the uncommitted rows of this
-    * transaction — exactly what the reference's cursor sees.
-    */
-  private def loadStrict(df: DataFrame, url: String, table: String,
-                         props: Properties, runTs: String,
-                         csvOut: Option[String], batchSize: Int,
-                         strictMaxRows: Int = StrictMaxRows): LoadReport = {
-    val runInstant = runInstantOf(df, runTs)
-    val typed = castRunTimestamps(df)
-    val conn = DriverManager.getConnection(url, props)
-    try {
-      conn.setAutoCommit(false)
-      val (created, importDate) =
-        if (!tableExists(conn, table)) {
-          val st = conn.createStatement()
-          try st.executeUpdate(i2b2Ddl(table)) finally st.close()
-          (true, None)
-        } else (false, firstImportDate(conn, table))
-      if (!created && countRowsAt(conn, table, runInstant) > 0)
-        throw new IllegalStateException(
-          s"run timestamp collision: rows with UPDATE_DATE = $runTs " +
-            s"already exist in $table — refusing to write")
-      val stamped = importDate match {
-        case Some(ts) => typed.withColumn("IMPORT_DATE", lit(ts))
-        case None => typed
-      }
-      // reference shape: the frame comes to the driver and writes
-      // through this one connection (pandas does the same); the cap
-      // keeps the mode honest about what it is for
-      val toWrite = stamped.cache()
-      try {
-        val rows = toWrite.count()
-        if (rows > strictMaxRows)
-          throw new IllegalStateException(
-            s"strictTxn collects to the driver: $rows rows exceeds the " +
-              s"$strictMaxRows-row cap — use the default distributed " +
-              "load for fact-table-scale frames")
-        val cols = I2b2Pipeline.outputCols
-        val schema = toWrite.schema
-        val colIdx = cols.map(schema.fieldIndex)
-        val intCols = Set("C_HLEVEL", "C_TOTALNUM")
-        val tsCols = Set("UPDATE_DATE", "DOWNLOAD_DATE", "IMPORT_DATE")
-        val ps = conn.prepareStatement(
-          s"INSERT INTO $table (${cols.mkString(", ")}) " +
-            s"VALUES (${cols.map(_ => "?").mkString(", ")})")
-        try {
-          var inBatch = 0
-          toWrite.toLocalIterator().forEachRemaining { row =>
-            var j = 0
-            while (j < cols.length) {
-              val c = cols(j)
-              val i = colIdx(j)
-              if (row.isNullAt(i)) {
-                val t =
-                  if (intCols(c)) java.sql.Types.INTEGER
-                  else if (tsCols(c)) java.sql.Types.TIMESTAMP
-                  else java.sql.Types.VARCHAR
-                ps.setNull(j + 1, t)
-              } else if (intCols(c)) ps.setInt(j + 1, row.getInt(i))
-              else if (tsCols(c)) ps.setTimestamp(j + 1, row.getTimestamp(i))
-              else ps.setString(j + 1, row.getString(i))
-              j += 1
-            }
-            ps.addBatch()
-            inBatch += 1
-            if (inBatch == batchSize) { ps.executeBatch(); inBatch = 0 }
-          }
-          if (inBatch > 0) ps.executeBatch()
-        } finally ps.close()
-        // L4 on the SAME connection: counts this txn's rows pre-commit
-        val verified = countRowsAt(conn, table, runInstant)
-        // L5 inside the bracket: a run whose CSV could not be written
-        // is a failed run — rollback, same as the reference
-        csvOut.foreach(p =>
-          toWrite.coalesce(1).write.option("header", "true")
-            .mode(SaveMode.Overwrite).csv(p))
-        conn.commit()
-        LoadReport(created, importDate, rows, verified)
-      } finally toWrite.unpersist()
-    } catch {
-      case e: Throwable =>
-        try conn.rollback()
-        catch { case c: Throwable => e.addSuppressed(c) }
-        throw e
-    } finally conn.close()
   }
 }

@@ -39,15 +39,39 @@ class LoadSpec extends SparkSpec {
       I2b2Config(runTimestamp = runTs))
   }
 
+  /** The transform output with a column that fails when evaluated:
+    * any Spark job that materializes the frame (the load's cached
+    * `count()`) throws, while building the frame and probing the DB
+    * do not.
+    */
+  private def poisoned(n: Int) = i2b2Rows.limit(n)
+    .withColumn("C_COMMENT", raise_error(lit("poisoned row")).cast("string"))
+
+  private def isPoison(e: Throwable): Boolean =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+      .exists(t => Option(t.getMessage).exists(_.contains("poisoned row")))
+
   test("load: creates table, appends, verifies count (L1, L3, L4)") {
     val url = "jdbc:derby:memory:graftdb1;create=true"
-    val df = i2b2Rows.limit(50)
+    // ordered limit: an unordered .limit(50) is free to pick DIFFERENT
+    // rows on the write pass vs the `want` pass below
+    val df = i2b2Rows.orderBy("C_FULLNAME").limit(50)
     val report = LoadOrchestrator.load(df, url, "I2B2",
       new Properties(), runTs)
     assert(report.createdTable)
     assert(report.firstImportDate.isEmpty)
     assert(report.rowsWritten === 50)
     assert(report.verifiedCount === 50)
+    // row contents survive the JDBC write: varchar, INT (C_HLEVEL) and
+    // TIMESTAMP columns all round-trip
+    val back = spark.read.jdbc(url, "I2B2", new Properties())
+    val want = df.select($"C_FULLNAME", $"C_HLEVEL").as[(String, Int)]
+      .collect().sorted.toSeq
+    val got = back.select($"C_FULLNAME", $"C_HLEVEL").as[(String, Int)]
+      .collect().sorted.toSeq
+    assert(got === want)
+    assert(back.select(countDistinct($"UPDATE_DATE")).as[Long]
+      .collect().head === 1)
   }
 
   test("load: second run stamps the first run's IMPORT_DATE (L2)") {
@@ -132,126 +156,6 @@ class LoadSpec extends SparkSpec {
     finally conn.close()
   }
 
-  test("loadStrict: happy-path commit — report counts, row contents, " +
-    "and the L5 export all land through the one transaction") {
-    val url = "jdbc:derby:memory:graftdb_s1;create=true"
-    val out = java.nio.file.Files
-      .createTempDirectory("graft_s1").toString + "/export"
-    // ordered limit: an unordered .limit(20) is free to pick DIFFERENT
-    // rows on the write pass vs the `want` pass below
-    val df = i2b2Rows.orderBy("C_FULLNAME").limit(20)
-    val report = LoadOrchestrator.load(df, url, "I2B2",
-      new Properties(), runTs, csvOut = Some(out), strictTxn = true)
-    assert(report.createdTable)
-    assert(report.firstImportDate.isEmpty)
-    assert(report.rowsWritten === 20)
-    assert(report.verifiedCount === 20)
-    val back = spark.read.jdbc(url, "I2B2", new Properties())
-    assert(back.count() === 20)
-    // row contents survive the driver-side JDBC type mapping:
-    // varchar, INT (C_HLEVEL), and TIMESTAMP columns all round-trip
-    val want = df.select($"C_FULLNAME", $"C_HLEVEL").as[(String, Int)]
-      .collect().sortBy(_._1).toSeq
-    val got = back.select($"C_FULLNAME", $"C_HLEVEL").as[(String, Int)]
-      .collect().sortBy(_._1).toSeq
-    assert(got === want)
-    assert(back.select(countDistinct($"UPDATE_DATE")).as[Long]
-      .collect().head === 1)
-    val csv = spark.read.option("header", "true").csv(out)
-    assert(csv.count() === 20)
-  }
-
-  test("loadStrict: a mid-batch failure rolls back the WHOLE run — " +
-    "zero rows observed, prior runs untouched, DDL included (L6 strict)") {
-    val url = "jdbc:derby:memory:graftdb_s2;create=true"
-    // run A commits 10 rows through the strict bracket
-    LoadOrchestrator.load(i2b2Rows.limit(10), url, "I2B2",
-      new Properties(), runTs, strictTxn = true)
-    // run B poisons its 5th row with a C_NAME over the DDL's varchar
-    // cap; batchSize = 2 means two batches have already EXECUTED on
-    // the connection (4 rows, uncommitted) when batch 3 fails — the
-    // single-transaction contract requires those rows to vanish with
-    // the rollback, not linger like the default path's pre-delete
-    // window would allow
-    val tsB = "05-01-2026 08:00:00"
-    val cap = I2b2Pipeline.varcharCaps.toMap.apply("C_NAME")
-    val poisoned = i2b2Rows.limit(6)
-      .withColumn("UPDATE_DATE", lit(tsB))
-      .withColumn("DOWNLOAD_DATE", lit(tsB))
-      .withColumn("IMPORT_DATE", lit(tsB))
-      .withColumn("C_NAME",
-        when(monotonically_increasing_id() === 4,
-          lit("x" * (cap + 10))).otherwise($"C_NAME"))
-    val e = intercept[Exception] {
-      LoadOrchestrator.load(poisoned, url, "I2B2", new Properties(),
-        tsB, batchSize = 2, strictTxn = true)
-    }
-    assert(e.isInstanceOf[java.sql.SQLException] ||
-      e.getCause.isInstanceOf[java.sql.SQLException])
-    val back = spark.read.jdbc(url, "I2B2", new Properties())
-    assert(back.count() === 10) // run A only
-    assert(back.filter($"UPDATE_DATE" === to_timestamp(lit(tsB),
-      "dd-MM-yyyy HH:mm:ss")).count() === 0)
-    // and on a FRESH database the rollback undoes the DDL too: the
-    // global transaction leaves NO trace of a failed first run
-    val url2 = "jdbc:derby:memory:graftdb_s3;create=true"
-    intercept[Exception] {
-      LoadOrchestrator.load(poisoned, url2, "I2B2", new Properties(),
-        tsB, batchSize = 2, strictTxn = true)
-    }
-    val conn = java.sql.DriverManager.getConnection(url2,
-      new Properties())
-    try assert(!LoadOrchestrator.tableExists(conn, "I2B2"))
-    finally conn.close()
-  }
-
-  test("loadStrict: refuses frames over strictMaxRows before writing " +
-    "anything — the driver-collect cap is a hard gate") {
-    val url = "jdbc:derby:memory:graftdb_s4;create=true"
-    val e = intercept[IllegalStateException] {
-      LoadOrchestrator.load(i2b2Rows.limit(10), url, "I2B2",
-        new Properties(), runTs, strictTxn = true, strictMaxRows = 5)
-    }
-    assert(e.getMessage.contains("cap"))
-    // nothing observed: the refusal rolled the transaction back
-    // before any insert, DDL included
-    val conn = java.sql.DriverManager.getConnection(url,
-      new Properties())
-    try assert(!LoadOrchestrator.tableExists(conn, "I2B2"))
-    finally conn.close()
-  }
-
-  test("loadStrict: second run stamps the first run's IMPORT_DATE and " +
-    "L4-verifies only its own rows through the one connection (L2/L4)") {
-    val url = "jdbc:derby:memory:graftdb_s5;create=true"
-    LoadOrchestrator.load(i2b2Rows.limit(10), url, "I2B2",
-      new Properties(), runTs, strictTxn = true)
-    val laterTs = "06-01-2026 12:00:00"
-    val later = i2b2Rows.limit(7)
-      .withColumn("UPDATE_DATE", lit(laterTs))
-      .withColumn("DOWNLOAD_DATE", lit(laterTs))
-      .withColumn("IMPORT_DATE", lit(laterTs))
-    val report = LoadOrchestrator.load(later, url, "I2B2",
-      new Properties(), laterTs, strictTxn = true)
-    assert(!report.createdTable)
-    assert(report.firstImportDate.map(_.toString)
-      === Some("2026-01-01 00:00:00.0"))
-    assert(report.rowsWritten === 7)
-    // L4 counted THIS run's (pre-commit) rows on the same connection
-    assert(report.verifiedCount === 7)
-    val back = spark.read.jdbc(url, "I2B2", new Properties())
-    assert(back.count() === 17)
-    assert(back.select(countDistinct($"IMPORT_DATE")).as[Long]
-      .collect().head === 1)
-    // and a colliding re-run of the SAME timestamp refuses (the
-    // strict path carries the same collision probe as the default)
-    val e = intercept[IllegalStateException] {
-      LoadOrchestrator.load(later, url, "I2B2", new Properties(),
-        laterTs, strictTxn = true)
-    }
-    assert(e.getMessage.contains("collision"))
-  }
-
   test("load refuses a colliding run timestamp instead of risking " +
     "another run's rows (L6)") {
     val url = "jdbc:derby:memory:graftdb7;create=true"
@@ -260,13 +164,47 @@ class LoadSpec extends SparkSpec {
     // A second load reusing the SAME runTs must fail fast BEFORE
     // writing: had it proceeded and failed mid-write, the compensating
     // DELETE (keyed only on UPDATE_DATE) would destroy the first
-    // run's committed rows.
+    // run's committed rows. The frame is poisoned, so the refusal
+    // must come before any Spark job evaluates it.
     val e = intercept[IllegalStateException] {
-      LoadOrchestrator.load(i2b2Rows.limit(2), url, "I2B2",
+      LoadOrchestrator.load(poisoned(2), url, "I2B2",
         new Properties(), runTs)
     }
     assert(e.getMessage.contains("collision"))
     assert(spark.read.jdbc(url, "I2B2", new Properties()).count() === 3)
+  }
+
+  test("load failure before any insert leaves no trace: a fresh " +
+    "database keeps no table, an existing table keeps the earlier " +
+    "run's rows (L6)") {
+    val fresh = "jdbc:derby:memory:graftdb8;create=true"
+    val e1 = intercept[Exception] {
+      LoadOrchestrator.load(poisoned(4), fresh, "I2B2",
+        new Properties(), runTs)
+    }
+    assert(isPoison(e1), e1)
+    val conn = java.sql.DriverManager.getConnection(fresh, new Properties())
+    try assert(!LoadOrchestrator.tableExists(conn, "I2B2"))
+    finally conn.close()
+
+    val url = "jdbc:derby:memory:graftdb9;create=true"
+    LoadOrchestrator.load(i2b2Rows.limit(5), url,
+      "I2B2", new Properties(), runTs)
+    def rows() = spark.read.jdbc(url, "I2B2", new Properties())
+      .collect().map(_.mkString("|")).sorted.toSeq
+    val before = rows()
+    val tsB = "07-01-2026 08:00:00"
+    val e2 = intercept[Exception] {
+      LoadOrchestrator.load(poisoned(4)
+        .withColumn("UPDATE_DATE", lit(tsB))
+        .withColumn("DOWNLOAD_DATE", lit(tsB))
+        .withColumn("IMPORT_DATE", lit(tsB)),
+        url, "I2B2", new Properties(), tsB)
+    }
+    assert(isPoison(e2), e2)
+    val after = rows()
+    assert(after.size === 5)
+    assert(after === before)
   }
 
   test("zipEntryCsv: distributed unzip honors entry name and schema (S2)") {
