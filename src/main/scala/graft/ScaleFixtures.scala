@@ -53,90 +53,83 @@ object ScaleFixtures {
       s"${graft.sources.Tables.load(spark, dir, t).count()} $t"
     }.mkString(" / ")
 
-  /** Generate the scaled tier into `outDir` unless already committed.
-    * Commit sentinel = the _SUCCESS marker of the LAST table each
-    * generator writes: Spark creates the output DIRECTORY at write
-    * start, so a bare exists() is true even for a crashed, never-
-    * committed write; _SUCCESS lands only at job commit, making the
-    * skip decision transactional — a crash anywhere mid-generation
-    * regenerates instead of serving a half-written fixture set.
+  /** Generate the scaled tier into `outDir` unless it already holds
+    * this call's tier. The tier records its origin in `_SOURCE` (the
+    * source dir's absolute path and the factor), written LAST: a tier
+    * whose `_SOURCE` is missing (a crash mid-generation, or a tier of
+    * unknown origin) or names another source or factor is regenerated,
+    * every table rewritten, so a `target/sf1` made from sf0.001 is
+    * never served to an sf0.01 run.
     */
   def ensure(spark: SparkSession, srcDir: String, outDir: String,
              factor: Int): Unit = {
-    def committed(table: String): Boolean =
-      new java.io.File(s"$outDir/$table.parquet/_SUCCESS").exists()
+    val stamp = Paths.get(outDir, "_SOURCE")
+    val origin =
+      s"${Paths.get(srcDir).toAbsolutePath.normalize}\nfactor=$factor\n"
+    if (Files.exists(stamp) &&
+        new String(Files.readAllBytes(stamp), "UTF-8") == origin) return
+    println(s"[scale] generating ${factor}x $srcDir into $outDir ...")
+    Files.deleteIfExists(stamp)
     val reps = spark.range(factor).select(col("id").as("__k"))
 
-    if (!committed("embeddings")) {
-      println(s"[scale] generating ${factor}x documents/embeddings " +
-        s"into $outDir ...")
-      val docs = graft.sources.Tables.load(spark, srcDir, "documents")
-      docs.crossJoin(reps)
-        .select(
-          (col("doc_id").cast("long") + col("__k") * 10000000L)
-            .as("doc_id"),
-          when(col("__k") === 0, col("text"))
-            .otherwise(concat(lit("r"), col("__k").cast("string"),
-              lit("salt "), col("text"))).as("text"),
-          col("lang"), col("source"),
-          (col("n_chars") + when(col("__k") === 0, 0).otherwise(7))
-            .as("n_chars"))
-        .repartition(32)
-        .write.mode("overwrite").parquet(s"$outDir/documents.parquet")
-      val emb = graft.sources.Tables.load(spark, srcDir, "embeddings")
-      emb.crossJoin(reps)
-        .select((col("vec_id").cast("long") + col("__k") * 10000000L)
-            .as("vec_id"),
-          col("embedding"), col("label"))
-        .repartition(32)
-        .write.mode("overwrite").parquet(s"$outDir/embeddings.parquet")
-    }
+    val docs = graft.sources.Tables.load(spark, srcDir, "documents")
+    docs.crossJoin(reps)
+      .select(
+        (col("doc_id").cast("long") + col("__k") * 10000000L)
+          .as("doc_id"),
+        when(col("__k") === 0, col("text"))
+          .otherwise(concat(lit("r"), col("__k").cast("string"),
+            lit("salt "), col("text"))).as("text"),
+        col("lang"), col("source"),
+        (col("n_chars") + when(col("__k") === 0, 0).otherwise(7))
+          .as("n_chars"))
+      .repartition(32)
+      .write.mode("overwrite").parquet(s"$outDir/documents.parquet")
+    val emb = graft.sources.Tables.load(spark, srcDir, "embeddings")
+    emb.crossJoin(reps)
+      .select((col("vec_id").cast("long") + col("__k") * 10000000L)
+          .as("vec_id"),
+        col("embedding"), col("label"))
+      .repartition(32)
+      .write.mode("overwrite").parquet(s"$outDir/embeddings.parquet")
 
-    if (!committed("events")) {
-      println(s"[scale] generating ${factor}x relational fixtures " +
-        s"into $outDir ...")
-      def scaled(name: String, idCols: Map[String, Long]): Unit = {
-        val src = graft.sources.Tables.load(spark, srcDir, name)
-        src.crossJoin(reps)
-          .select(src.columns.map { c =>
-            idCols.get(c)
-              .map(off =>
-                (col(c).cast("long") + col("__k") * off).as(c))
-              .getOrElse(col(c))
-          }.toSeq: _*)
-          .repartition(32)
-          .write.mode("overwrite").parquet(s"$outDir/$name.parquet")
-      }
-      scaled("orders", Map("o_orderkey" -> 100000000L,
-        "o_custkey" -> 10000000L))
-      scaled("lineitem", Map("l_orderkey" -> 100000000L,
-        "l_partkey" -> 10000000L, "l_suppkey" -> 10000000L))
-      scaled("customer", Map("c_custkey" -> 10000000L))
-      scaled("supplier", Map("s_suppkey" -> 10000000L))
-      scaled("events", Map("event_id" -> 100000000L,
-        "user_id" -> 10000000L))
-    }
-
-    // round-12 consumers (i2b2 spine, TPC-H nation joins) read the
-    // remaining tables: part replicates with offset keys; nation and
-    // region are FIXED-cardinality dims (25 / 5 rows at every TPC-H
-    // scale factor) and copy verbatim. Keyed on its own _SUCCESS so
-    // tiers generated before this block upgrade in place.
-    if (!committed("part")) {
-      println(s"[scale] generating ${factor}x part + dims into " +
-        s"$outDir ...")
-      val part = graft.sources.Tables.load(spark, srcDir, "part")
-      part.crossJoin(reps)
-        .select(part.columns.map { c =>
-          if (c == "p_partkey")
-            (col(c).cast("long") + col("__k") * 10000000L).as(c)
-          else col(c)
+    def scaled(name: String, idCols: Map[String, Long]): Unit = {
+      val src = graft.sources.Tables.load(spark, srcDir, name)
+      src.crossJoin(reps)
+        .select(src.columns.map { c =>
+          idCols.get(c)
+            .map(off =>
+              (col(c).cast("long") + col("__k") * off).as(c))
+            .getOrElse(col(c))
         }.toSeq: _*)
         .repartition(32)
-        .write.mode("overwrite").parquet(s"$outDir/part.parquet")
-      for (dim <- Seq("nation", "region"))
-        graft.sources.Tables.load(spark, srcDir, dim)
-          .write.mode("overwrite").parquet(s"$outDir/$dim.parquet")
+        .write.mode("overwrite").parquet(s"$outDir/$name.parquet")
     }
+    scaled("orders", Map("o_orderkey" -> 100000000L,
+      "o_custkey" -> 10000000L))
+    scaled("lineitem", Map("l_orderkey" -> 100000000L,
+      "l_partkey" -> 10000000L, "l_suppkey" -> 10000000L))
+    scaled("customer", Map("c_custkey" -> 10000000L))
+    scaled("supplier", Map("s_suppkey" -> 10000000L))
+    scaled("events", Map("event_id" -> 100000000L,
+      "user_id" -> 10000000L))
+
+    // the i2b2 spine and the TPC-H nation joins read the remaining
+    // tables: part replicates with offset keys; nation and region are
+    // FIXED-cardinality dims (25 / 5 rows at every TPC-H scale
+    // factor) and copy verbatim
+    val part = graft.sources.Tables.load(spark, srcDir, "part")
+    part.crossJoin(reps)
+      .select(part.columns.map { c =>
+        if (c == "p_partkey")
+          (col(c).cast("long") + col("__k") * 10000000L).as(c)
+        else col(c)
+      }.toSeq: _*)
+      .repartition(32)
+      .write.mode("overwrite").parquet(s"$outDir/part.parquet")
+    for (dim <- Seq("nation", "region"))
+      graft.sources.Tables.load(spark, srcDir, dim)
+        .write.mode("overwrite").parquet(s"$outDir/$dim.parquet")
+    Files.write(stamp, origin.getBytes("UTF-8"))
   }
 }

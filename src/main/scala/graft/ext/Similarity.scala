@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.VectorColumns
 
 /** Embedding similarity search: brute-force cosine top-k as the exact
   * baseline, and a random-hyperplane LSH bucketed variant as the
@@ -94,15 +95,13 @@ object Similarity {
   }
 
   /** Dot product of two float vectors: native codegen'd kernel
-    * (graft.functions.VecDot) — a tight primitive loop instead of a
-    * per-element lambda; bit-identical to the higher-order
-    * `aggregate(zip_with(...))` fold it replaces.
+    * (org.apache.spark.sql.graft.VecDot) — a tight primitive loop
+    * instead of a per-element lambda; bit-identical to the
+    * higher-order `aggregate(zip_with(...))` fold it replaces.
     */
-  def dot(a: Column, b: Column): Column =
-    graft.functions.VectorFunctions.vec_dot(a, b)
+  def dot(a: Column, b: Column): Column = VectorColumns.vec_dot(a, b)
 
-  def norm(a: Column): Column =
-    graft.functions.VectorFunctions.vec_norm(a)
+  def norm(a: Column): Column = VectorColumns.vec_norm(a)
 
   def cosine(a: Column, b: Column): Column =
     dot(a, b) / (norm(a) * norm(b))
@@ -648,12 +647,6 @@ object Similarity {
       .select("id_a", "id_b", "cos")
       .distinct()
   }
-
-  /** Squared L2 distance: native codegen'd kernel, elementwise
-    * (xᵢ−yᵢ)² left-to-right fold — the PQ assignment metric.
-    */
-  def l2sq(a: Column, b: Column): Column =
-    graft.functions.VectorFunctions.vec_l2sq(a, b)
 
   /** Product-quantization top-k by asymmetric distance computation
     * (Jégou/Douze/Schmid, TPAMI'11 — the FAISS `PQ` index): split

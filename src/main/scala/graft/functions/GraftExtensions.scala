@@ -1,27 +1,14 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSessionExtensions}
+import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 import org.apache.spark.sql.graft.VectorColumns
 
-/** Column-level entry points for the native vector kernels. */
-object VectorFunctions {
-  def vec_dot(a: Column, b: Column): Column = VectorColumns.vec_dot(a, b)
-
-  def vec_norm(a: Column): Column = VectorColumns.vec_norm(a)
-
-  def vec_l2sq(a: Column, b: Column): Column = VectorColumns.vec_l2sq(a, b)
-
-  /** Register vec_dot/vec_norm/vec_l2sq in an existing session for SQL use. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    VectorColumns.register(spark)
-}
-
 /** SparkSessionExtensions installer exposing the native kernels to
   * SQL: `spark.sql.extensions=graft.functions.GraftExtensions` makes
   * `vec_dot(a, b)` / `vec_norm(a)` callable from `spark.sql(...)`.
-  * The DataFrame API path ([[VectorFunctions]]) needs no registration.
+  * The DataFrame API path ([[VectorColumns]]) needs no registration.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {

@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Key-based deduplication operators.
@@ -12,10 +11,8 @@ import org.apache.spark.sql.functions._
   *
   * Scale notes: `lastWins` (groupBy + max_by) gets map-side partial
   * aggregation, so at 100 TB each shuffle partition only receives one
-  * candidate row per (key, mapper) — strictly better than the window
-  * variant, which shuffles every row then sorts. `lastWinsWindow` is
-  * kept because it preserves non-aggregated columns untouched and is
-  * the natural shape when many columns ride along.
+  * candidate row per (key, mapper) — strictly better than a window
+  * form, which shuffles every row then sorts.
   */
 object Dedup {
 
@@ -39,14 +36,6 @@ object Dedup {
       .agg(max_by(col(valueCols.head), ord).as(valueCols.head),
         valueCols.tail.map(c => max_by(col(c), ord).as(c)): _*)
       .select((keys ++ valueCols).map(col): _*)
-  }
-
-  /** Last-wins per key via window row_number — keeps every column. */
-  def lastWinsWindow(df: DataFrame, keys: Seq[String], ord: Column): DataFrame = {
-    val w = Window.partitionBy(keys.map(col): _*).orderBy(ord.desc)
-    df.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
-      .drop("__rn")
   }
 
   /** R4 distinct spine. */

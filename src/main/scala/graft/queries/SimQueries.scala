@@ -135,7 +135,7 @@ private[queries] object SimQueries {
     // SQL surface over the native kernels (registered imperatively;
     // sessions built with spark.sql.extensions get them for free).
     "sim_sql_cosine" -> { (s, dir) =>
-      graft.functions.VectorFunctions.register(s)
+      org.apache.spark.sql.graft.VectorColumns.register(s)
       // view name scoped by the fixture dir: temp views are
       // session-GLOBAL, so a bare "emb_sql" would race when two
       // threads run the query map for different dirs in one session

@@ -206,8 +206,4 @@ object Tables {
     StructField("PATH_TO_ROOT", StringType, nullable = true),
     StructField("IMMEDIATE_PARENT", StringType, nullable = true),
     StructField("seq", LongType, nullable = false)))
-
-  /** CSV read with an explicit schema (S2, Angelo_ETL_Task.py:21-26). */
-  def csv(spark: SparkSession, path: String, schema: StructType): DataFrame =
-    spark.read.option("header", "true").schema(schema).csv(path)
 }

@@ -3,13 +3,39 @@
 package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.BinaryExpression
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.types._
+
+private[graft] object AdcKernelUtil {
+  /** The fold [[AdcSumFlat]]'s eval and generated code both call. */
+  def sumFlat(codes: ArrayData, tbl: ArrayData, k: Int): Long = {
+    val len = tbl.numElements()
+    var sum = 0L
+    var c = 0
+    val n = codes.numElements()
+    while (c < n) {
+      if (!codes.isNullAt(c)) {
+        val row = codes.getStruct(c, 2)
+        if (!row.isNullAt(0) && !row.isNullAt(1)) {
+          val slot = row.getInt(0) * k + row.getInt(1)
+          if (slot < 0 || slot >= len) {
+            throw new ArrayIndexOutOfBoundsException(
+              s"adc_sum_flat: code slot $slot outside the " +
+                s"$len-entry table — codes paired with a mismatched " +
+                "codebook")
+          }
+          if (!tbl.isNullAt(slot)) sum += tbl.getLong(slot)
+        }
+      }
+      c += 1
+    }
+    sum
+  }
+}
 
 /** Native ADC scoring kernel (round 20).
   *
@@ -20,7 +46,8 @@ import org.apache.spark.sql.types._
   * fold (the same per-element interpretation that made the HOF argmax
   * 4× slower than [[VecArgmaxCos]]). This kernel is the codegen'd
   * twin over a FLAT [j·K + r] table: one tight loop per candidate
-  * row, one array deref per code entry.
+  * row, one array deref per code entry. The loop is written once, in
+  * [[AdcKernelUtil.sumFlat]]; `eval` and `doGenCode` both call it.
   *
   * Contract, mirroring the HOF fold it replaces entry by entry:
   * the sum starts at 0 and adds table(j·K + r) for each code entry
@@ -62,61 +89,14 @@ case class AdcSumFlat(codes: Expression, tbl: Expression, k: Int)
       "r: int>>, tbl: array<bigint>)")
   }
 
-  override def nullSafeEval(cs: Any, tb: Any): Any = {
-    val arr = cs.asInstanceOf[ArrayData]
-    val t = tb.asInstanceOf[ArrayData]
-    val len = t.numElements()
-    var sum = 0L
-    var c = 0
-    val n = arr.numElements()
-    while (c < n) {
-      if (!arr.isNullAt(c)) {
-        val row = arr.getStruct(c, 2)
-        if (!row.isNullAt(0) && !row.isNullAt(1)) {
-          val slot = row.getInt(0) * k + row.getInt(1)
-          if (slot < 0 || slot >= len) {
-            throw new ArrayIndexOutOfBoundsException(
-              s"adc_sum_flat: code slot $slot outside the " +
-                s"$len-entry table — codes paired with a mismatched " +
-                "codebook")
-          }
-          if (!t.isNullAt(slot)) sum += t.getLong(slot)
-        }
-      }
-      c += 1
-    }
-    sum
-  }
+  override def nullSafeEval(cs: Any, tb: Any): Any =
+    AdcKernelUtil.sumFlat(cs.asInstanceOf[ArrayData],
+      tb.asInstanceOf[ArrayData], k)
 
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (cs, tb) => {
-      val c = ctx.freshName("c")
-      val n = ctx.freshName("n")
-      val len = ctx.freshName("len")
-      val row = ctx.freshName("row")
-      val slot = ctx.freshName("slot")
-      val sum = ctx.freshName("sum")
-      s"""
-         |long $sum = 0L;
-         |int $n = $cs.numElements();
-         |int $len = $tb.numElements();
-         |for (int $c = 0; $c < $n; $c++) {
-         |  if ($cs.isNullAt($c)) continue;
-         |  org.apache.spark.sql.catalyst.InternalRow $row =
-         |    $cs.getStruct($c, 2);
-         |  if ($row.isNullAt(0) || $row.isNullAt(1)) continue;
-         |  int $slot = $row.getInt(0) * $k + $row.getInt(1);
-         |  if ($slot < 0 || $slot >= $len) {
-         |    throw new ArrayIndexOutOfBoundsException(
-         |      "adc_sum_flat: code slot " + $slot + " outside the " +
-         |      $len + "-entry table - codes paired with a " +
-         |      "mismatched codebook");
-         |  }
-         |  if (!$tb.isNullAt($slot)) $sum += $tb.getLong($slot);
-         |}
-         |${ev.value} = $sum;
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, (cs, tb) =>
+      s"${ev.value} = org.apache.spark.sql.graft.AdcKernelUtil" +
+        s".sumFlat($cs, $tb, $k);")
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): AdcSumFlat =

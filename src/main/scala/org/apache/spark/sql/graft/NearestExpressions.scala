@@ -23,7 +23,10 @@ import org.apache.spark.sql.types._
   * exchange, no sort — one tight codegen'd loop per corpus row. (The
   * HOF form — `array_min(transform(...))` — was measured 4× slower in
   * an earlier round: lambdas interpret the metric per element. These
-  * are the native kernels that comment asked for.)
+  * are the native kernels that comment asked for.) The selection loop
+  * is written once, in [[NearestKernelUtil]], over the [[VecKernelUtil]]
+  * dot and squared-L2 folds; `eval` calls it and `doGenCode` only emits
+  * a call to it, so the generated and the interpreted path are one.
   *
   * Numeric contract, bit-for-bit identical to the aggregates they
   * replace (and to the DuckDB oracles) for NON-NULL inputs with
@@ -63,14 +66,6 @@ private[graft] object NearestKernelUtil {
     if (x < y) -1 else if (x > y) 1 else if (x == y) 0
     else java.lang.Double.compare(x, y)
 
-  /** The same ladder as inline Java source. */
-  def cmpDJava(x: String, y: String): String =
-    s"(($x < $y) ? -1 : ($x > $y) ? 1 : ($x == $y) ? 0 : " +
-      s"java.lang.Double.compare($x, $y))"
-
-  def isFloatArray(dt: DataType): Boolean =
-    dt.asInstanceOf[ArrayType].elementType == FloatType
-
   /** Read an integral struct field as long (candidate ids are
     * integral by the callers' contract).
     */
@@ -84,20 +79,91 @@ private[graft] object NearestKernelUtil {
         s"candidate id must be integral, got $other")
     }
 
-  def idGetterJava(dt: DataType): String = dt match {
-    case LongType => "getLong"
-    case IntegerType => "getInt"
-    case ShortType => "getShort"
-    case ByteType => "getByte"
-    case other => throw new IllegalStateException(
-      s"candidate id must be integral, got $other")
-  }
+  /** A winning cid back in its column's type (the eval result). */
+  def narrowId(cid: java.lang.Long, dt: DataType): Any =
+    if (cid == null) null
+    else dt match {
+      case IntegerType => cid.intValue()
+      case ShortType => cid.shortValue()
+      case ByteType => cid.byteValue()
+      case _ => cid.longValue()
+    }
 
   def candStruct(dt: DataType): StructType =
     dt.asInstanceOf[ArrayType].elementType.asInstanceOf[StructType]
+
+  /** The in-row selection both kernels share. With `cosine` it is
+    * the argmax of dot(x, cv) / (pn · cn) over
+    * array<struct<cid, cv, cn>>; without, the argmin of Σ(xᵢ − cvᵢ)²
+    * over array<struct<cid, cv>>. Each metric is the [[VecKernelUtil]]
+    * fold. A candidate is null-metric when its cv or cn is NULL, its
+    * cv's length differs from x's, or x or cv holds a NULL element
+    * (probed only where the schema allows one: `xNullable`,
+    * `cvNullable`). That tier ranks below every real candidate in
+    * the argmax and above them in the argmin; ties go to the smaller
+    * cid; candidates with a NULL cid are ignored; none left → null.
+    */
+  private def nearest(x: ArrayData, xf: Boolean, xNullable: Boolean,
+                      pn: Double, cands: ArrayData, cvf: Boolean,
+                      cvNullable: Boolean, idDt: DataType,
+                      cosine: Boolean): java.lang.Long = {
+    val width = if (cosine) 3 else 2
+    val xNull = xNullable && VecKernelUtil.anyNull(x)
+    val n = x.numElements()
+    var best = 0.0
+    var bestCid = 0L
+    var has = false
+    var hasNull = false
+    var nullCid = 0L
+    var c = 0
+    val k = cands.numElements()
+    while (c < k) {
+      if (!cands.isNullAt(c)) {
+        val row = cands.getStruct(c, width)
+        if (!row.isNullAt(0)) {
+          val cid = idAsLong(row, 0, idDt)
+          var nul = xNull || row.isNullAt(1) || cosine && row.isNullAt(2)
+          val cv = if (nul) null else row.getArray(1)
+          if (!nul) nul = cv.numElements() != n ||
+            cvNullable && VecKernelUtil.anyNull(cv)
+          if (nul) {
+            if (!hasNull || cid < nullCid) { nullCid = cid; hasNull = true }
+          } else {
+            val m =
+              if (cosine)
+                VecKernelUtil.dotFold(x, xf, cv, cvf) /
+                  (pn * row.getDouble(2))
+              else VecKernelUtil.l2sqFold(x, xf, cv, cvf)
+            val cmp = if (has) cmpD(m, best) else 0
+            if (!has || (if (cosine) cmp > 0 else cmp < 0) ||
+                (cmp == 0 && cid < bestCid)) {
+              best = m; bestCid = cid; has = true
+            }
+          }
+        }
+      }
+      c += 1
+    }
+    if (hasNull && (!cosine || !has)) java.lang.Long.valueOf(nullCid)
+    else if (has) java.lang.Long.valueOf(bestCid)
+    else null
+  }
+
+  def argmaxCos(x: ArrayData, xf: Boolean, xNullable: Boolean, pn: Double,
+                cands: ArrayData, cvf: Boolean, cvNullable: Boolean,
+                idDt: DataType): java.lang.Long =
+    nearest(x, xf, xNullable, pn, cands, cvf, cvNullable, idDt,
+      cosine = true)
+
+  def argminL2(x: ArrayData, xf: Boolean, xNullable: Boolean,
+               cands: ArrayData, cvf: Boolean, cvNullable: Boolean,
+               idDt: DataType): java.lang.Long =
+    nearest(x, xf, xNullable, 0.0, cands, cvf, cvNullable, idDt,
+      cosine = false)
 }
 
 import NearestKernelUtil._
+import VecKernelUtil.{isFloat, mayNull}
 
 /** argmax over broadcast candidates by cosine: for point vector `v`
   * with precomputed norm `vn`, and `cands` an
@@ -133,155 +199,26 @@ case class VecArgmaxCos(v: Expression, vn: Expression, cands: Expression)
       "cands: array<struct<cid, cv: array, cn: double>>)")
   }
 
-  override def eval(input: InternalRow): Any = {
-    val vv = v.eval(input)
-    val nv = vn.eval(input)
-    val ca = cands.eval(input)
-    if (vv == null || nv == null || ca == null) return null
-    val x = vv.asInstanceOf[ArrayData]
-    val pn = nv.asInstanceOf[Double]
-    val arr = ca.asInstanceOf[ArrayData]
-    val vf = isFloatArray(v.dataType)
-    val cvf = isFloatArray(cand.fields(1).dataType)
-    val vNullable = VecKernelUtil.mayNull(v)
-    val cvNullable =
-      cand.fields(1).dataType.asInstanceOf[ArrayType].containsNull
-    val idDt = cand.fields(0).dataType
-    val n = x.numElements()
-    var best = 0.0
-    var bestCid = 0L
-    var has = false
-    var hasNull = false
-    var nullCid = 0L
-    var c = 0
-    val k = arr.numElements()
-    while (c < k) {
-      if (!arr.isNullAt(c)) {
-        val row = arr.getStruct(c, 3)
-        if (!row.isNullAt(0)) {
-          val cid = idAsLong(row, 0, idDt)
-          var nul = row.isNullAt(1) || row.isNullAt(2)
-          if (!nul) {
-            val cv = row.getArray(1)
-            if (cv.numElements() != n) nul = true
-            else {
-              val cn = row.getDouble(2)
-              var s = 0.0
-              var i = 0
-              while (i < n && !nul) {
-                if ((vNullable && x.isNullAt(i)) ||
-                    (cvNullable && cv.isNullAt(i))) nul = true
-                else {
-                  val xi = if (vf) x.getFloat(i).toDouble else x.getDouble(i)
-                  val yi = if (cvf) cv.getFloat(i).toDouble
-                    else cv.getDouble(i)
-                  s += xi * yi
-                  i += 1
-                }
-              }
-              if (!nul) {
-                val cos = s / (pn * cn)
-                val cmp = if (has) cmpD(cos, best) else 1
-                if (cmp > 0 || (cmp == 0 && cid < bestCid)) {
-                  best = cos; bestCid = cid; has = true
-                }
-              }
-            }
-          }
-          if (nul && (!hasNull || cid < nullCid)) {
-            nullCid = cid; hasNull = true
-          }
-        }
-      }
-      c += 1
-    }
-    // a null-metric candidate ranks BELOW every real one in the max
-    // (null sorts first), but wins (smallest cid) when no real exists
-    if (has || hasNull) {
-      if (!has) bestCid = nullCid
-    } else return null
-    idDt match {
-      case LongType => bestCid
-      case IntegerType => bestCid.toInt
-      case ShortType => bestCid.toShort
-      case ByteType => bestCid.toByte
-      case _ => bestCid
-    }
-  }
+  private lazy val vf = isFloat(v.dataType)
+  private lazy val cvf = isFloat(cand.fields(1).dataType)
+  private lazy val vNullable = mayNull(v.dataType)
+  private lazy val cvNullable = mayNull(cand.fields(1).dataType)
+  private lazy val idDt = cand.fields(0).dataType
 
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (xv, nv, ca) => {
-      val i = ctx.freshName("i")
-      val c = ctx.freshName("c")
-      val k = ctx.freshName("k")
-      val n = ctx.freshName("n")
-      val s = ctx.freshName("s")
-      val cosV = ctx.freshName("cos")
-      val cmp = ctx.freshName("cmp")
-      val row = ctx.freshName("row")
-      val cv = ctx.freshName("cv")
-      val cn = ctx.freshName("cn")
-      val cid = ctx.freshName("cid")
-      val best = ctx.freshName("best")
-      val bestCid = ctx.freshName("bestCid")
-      val has = ctx.freshName("has")
-      val nul = ctx.freshName("nul")
-      val gv = if (isFloatArray(v.dataType)) "getFloat" else "getDouble"
-      val gc = if (isFloatArray(cand.fields(1).dataType)) "getFloat"
-        else "getDouble"
-      val gid = idGetterJava(cand.fields(0).dataType)
-      val jt = CodeGenerator.javaType(dataType)
-      // schema-gated element null probes, the VecDot discipline
-      val hasNull = ctx.freshName("hasNull")
-      val nullCid = ctx.freshName("nullCid")
-      val vGuard = if (VecKernelUtil.mayNull(v))
-        s"if ($xv.isNullAt($i)) { $nul = true; break; }" else ""
-      val cGuard =
-        if (cand.fields(1).dataType.asInstanceOf[ArrayType].containsNull)
-          s"if ($cv.isNullAt($i)) { $nul = true; break; }" else ""
-      s"""
-         |int $n = $xv.numElements();
-         |double $best = 0.0;
-         |long $bestCid = 0L;
-         |boolean $has = false;
-         |boolean $hasNull = false;
-         |long $nullCid = 0L;
-         |int $k = $ca.numElements();
-         |for (int $c = 0; $c < $k; $c++) {
-         |  if ($ca.isNullAt($c)) continue;
-         |  org.apache.spark.sql.catalyst.InternalRow $row = $ca.getStruct($c, 3);
-         |  if ($row.isNullAt(0)) continue;
-         |  long $cid = (long) $row.$gid(0);
-         |  boolean $nul = $row.isNullAt(1) || $row.isNullAt(2);
-         |  if (!$nul) {
-         |    org.apache.spark.sql.catalyst.util.ArrayData $cv =
-         |      $row.getArray(1);
-         |    if ($cv.numElements() != $n) { $nul = true; } else {
-         |      double $cn = $row.getDouble(2);
-         |      double $s = 0.0;
-         |      for (int $i = 0; $i < $n; $i++) {
-         |        $vGuard
-         |        $cGuard
-         |        $s += (double) $xv.$gv($i) * (double) $cv.$gc($i);
-         |      }
-         |      if (!$nul) {
-         |        double $cosV = $s / ($nv * $cn);
-         |        int $cmp = $has ? ${cmpDJava(cosV, best)} : 1;
-         |        if ($cmp > 0 || ($cmp == 0 && $cid < $bestCid)) {
-         |          $best = $cosV; $bestCid = $cid; $has = true;
-         |        }
-         |      }
-         |    }
-         |  }
-         |  if ($nul && (!$hasNull || $cid < $nullCid)) {
-         |    $nullCid = $cid; $hasNull = true;
-         |  }
-         |}
-         |if ($has) { ${ev.value} = ($jt) $bestCid; }
-         |else if ($hasNull) { ${ev.value} = ($jt) $nullCid; }
-         |else { ${ev.isNull} = true; }
-       """.stripMargin
-    })
+  override def nullSafeEval(x: Any, pn: Any, ca: Any): Any =
+    narrowId(argmaxCos(x.asInstanceOf[ArrayData], vf, vNullable,
+      pn.asInstanceOf[Double], ca.asInstanceOf[ArrayData], cvf,
+      cvNullable, idDt), idDt)
+
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val idRef = ctx.addReferenceObj("idDt", idDt)
+    val jt = CodeGenerator.javaType(dataType)
+    nullSafeCodeGen(ctx, ev, (xv, nv, ca) => VecKernelUtil.unboxInto(
+      ctx, ev, "java.lang.Long",
+      "org.apache.spark.sql.graft.NearestKernelUtil.argmaxCos(" +
+        s"$xv, $vf, $vNullable, $nv, $ca, $cvf, $cvNullable, $idRef)",
+      b => s"($jt) $b.longValue()"))
+  }
 
   override protected def withNewChildrenInternal(
       newFirst: Expression, newSecond: Expression,
@@ -318,149 +255,25 @@ case class VecArgminL2(sv: Expression, cands: Expression)
       "cands: array<struct<cid, cv: array>>)")
   }
 
-  override def eval(input: InternalRow): Any = {
-    val vv = sv.eval(input)
-    val ca = cands.eval(input)
-    if (vv == null || ca == null) return null
-    val x = vv.asInstanceOf[ArrayData]
-    val arr = ca.asInstanceOf[ArrayData]
-    val vf = isFloatArray(sv.dataType)
-    val cvf = isFloatArray(cand.fields(1).dataType)
-    val vNullable = VecKernelUtil.mayNull(sv)
-    val cvNullable =
-      cand.fields(1).dataType.asInstanceOf[ArrayType].containsNull
-    val idDt = cand.fields(0).dataType
-    val n = x.numElements()
-    var best = 0.0
-    var bestCid = 0L
-    var has = false
-    var hasNull = false
-    var nullCid = 0L
-    var c = 0
-    val k = arr.numElements()
-    while (c < k) {
-      if (!arr.isNullAt(c)) {
-        val row = arr.getStruct(c, 2)
-        if (!row.isNullAt(0)) {
-          val cid = idAsLong(row, 0, idDt)
-          var nul = row.isNullAt(1)
-          if (!nul) {
-            val cv = row.getArray(1)
-            if (cv.numElements() != n) nul = true
-            else {
-              var s = 0.0
-              var i = 0
-              while (i < n && !nul) {
-                if ((vNullable && x.isNullAt(i)) ||
-                    (cvNullable && cv.isNullAt(i))) nul = true
-                else {
-                  val xi = if (vf) x.getFloat(i).toDouble else x.getDouble(i)
-                  val yi = if (cvf) cv.getFloat(i).toDouble
-                    else cv.getDouble(i)
-                  val d = xi - yi
-                  s += d * d
-                  i += 1
-                }
-              }
-              if (!nul) {
-                val cmp = if (has) cmpD(s, best) else -1
-                if (cmp < 0 || (cmp == 0 && cid < bestCid)) {
-                  best = s; bestCid = cid; has = true
-                }
-              }
-            }
-          }
-          if (nul && (!hasNull || cid < nullCid)) {
-            nullCid = cid; hasNull = true
-          }
-        }
-      }
-      c += 1
-    }
-    // a null-metric candidate ranks ABOVE every real one in the min
-    // (null sorts first in an ascending struct ordering)
-    if (hasNull || has) {
-      if (hasNull) bestCid = nullCid
-    } else return null
-    idDt match {
-      case LongType => bestCid
-      case IntegerType => bestCid.toInt
-      case ShortType => bestCid.toShort
-      case ByteType => bestCid.toByte
-      case _ => bestCid
-    }
-  }
+  private lazy val vf = isFloat(sv.dataType)
+  private lazy val cvf = isFloat(cand.fields(1).dataType)
+  private lazy val vNullable = mayNull(sv.dataType)
+  private lazy val cvNullable = mayNull(cand.fields(1).dataType)
+  private lazy val idDt = cand.fields(0).dataType
 
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (xv, ca) => {
-      val i = ctx.freshName("i")
-      val c = ctx.freshName("c")
-      val k = ctx.freshName("k")
-      val n = ctx.freshName("n")
-      val s = ctx.freshName("s")
-      val d = ctx.freshName("d")
-      val cmp = ctx.freshName("cmp")
-      val row = ctx.freshName("row")
-      val cv = ctx.freshName("cv")
-      val cid = ctx.freshName("cid")
-      val best = ctx.freshName("best")
-      val bestCid = ctx.freshName("bestCid")
-      val has = ctx.freshName("has")
-      val nul = ctx.freshName("nul")
-      val gv = if (isFloatArray(sv.dataType)) "getFloat" else "getDouble"
-      val gc = if (isFloatArray(cand.fields(1).dataType)) "getFloat"
-        else "getDouble"
-      val gid = idGetterJava(cand.fields(0).dataType)
-      val jt = CodeGenerator.javaType(dataType)
-      val hasNull = ctx.freshName("hasNull")
-      val nullCid = ctx.freshName("nullCid")
-      val vGuard = if (VecKernelUtil.mayNull(sv))
-        s"if ($xv.isNullAt($i)) { $nul = true; break; }" else ""
-      val cGuard =
-        if (cand.fields(1).dataType.asInstanceOf[ArrayType].containsNull)
-          s"if ($cv.isNullAt($i)) { $nul = true; break; }" else ""
-      s"""
-         |int $n = $xv.numElements();
-         |double $best = 0.0;
-         |long $bestCid = 0L;
-         |boolean $has = false;
-         |boolean $hasNull = false;
-         |long $nullCid = 0L;
-         |int $k = $ca.numElements();
-         |for (int $c = 0; $c < $k; $c++) {
-         |  if ($ca.isNullAt($c)) continue;
-         |  org.apache.spark.sql.catalyst.InternalRow $row = $ca.getStruct($c, 2);
-         |  if ($row.isNullAt(0)) continue;
-         |  long $cid = (long) $row.$gid(0);
-         |  boolean $nul = $row.isNullAt(1);
-         |  if (!$nul) {
-         |    org.apache.spark.sql.catalyst.util.ArrayData $cv =
-         |      $row.getArray(1);
-         |    if ($cv.numElements() != $n) { $nul = true; } else {
-         |      double $s = 0.0;
-         |      for (int $i = 0; $i < $n; $i++) {
-         |        $vGuard
-         |        $cGuard
-         |        double $d = (double) $xv.$gv($i) - (double) $cv.$gc($i);
-         |        $s += $d * $d;
-         |      }
-         |      if (!$nul) {
-         |        int $cmp = $has ? ${cmpDJava(s, best)} : -1;
-         |        if ($cmp < 0 || ($cmp == 0 && $cid < $bestCid)) {
-         |          $best = $s; $bestCid = $cid; $has = true;
-         |        }
-         |      }
-         |    }
-         |  }
-         |  if ($nul && (!$hasNull || $cid < $nullCid)) {
-         |    $nullCid = $cid; $hasNull = true;
-         |  }
-         |}
-         |if ($hasNull) { ${ev.value} = ($jt) $nullCid; }
-         |else if ($has) { ${ev.value} = ($jt) $bestCid; }
-         |else { ${ev.isNull} = true; }
-       """.stripMargin
-    })
+  override def nullSafeEval(x: Any, ca: Any): Any =
+    narrowId(argminL2(x.asInstanceOf[ArrayData], vf, vNullable,
+      ca.asInstanceOf[ArrayData], cvf, cvNullable, idDt), idDt)
+
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val idRef = ctx.addReferenceObj("idDt", idDt)
+    val jt = CodeGenerator.javaType(dataType)
+    nullSafeCodeGen(ctx, ev, (xv, ca) => VecKernelUtil.unboxInto(
+      ctx, ev, "java.lang.Long",
+      "org.apache.spark.sql.graft.NearestKernelUtil.argminL2(" +
+        s"$xv, $vf, $vNullable, $ca, $cvf, $cvNullable, $idRef)",
+      b => s"($jt) $b.longValue()"))
+  }
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): VecArgminL2 =

@@ -11,28 +11,124 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.types._
 
-/** Shared schema probe for the kernels below. */
+/** The vector kernels' math, one definition each: `eval` calls these
+  * helpers directly and `doGenCode` emits a call to them, so the
+  * interpreted and the generated path cannot drift apart. Numerics
+  * are the exact IEEE754 sequence of the higher-order-function form
+  * (and the DuckDB oracles): left-to-right accumulation in double,
+  * each float upcast exactly. A metric is NULL on a length mismatch
+  * or a NULL element (the zip_with+aggregate contract: zip_with pads
+  * with null and the fold poisons to NULL; getFloat on a null slot
+  * would silently read 0.0); such a result comes back as a null box.
+  */
 private[graft] object VecKernelUtil {
-  /** Whether the expression's ARRAY ELEMENTS may be null per the
-    * schema — the kernels' per-element null-bit probes compile in
-    * only then (containsNull=false proves them dead).
+  /** Whether an array type's ELEMENTS may be null per the schema —
+    * the per-element null probes run only then (containsNull=false
+    * proves them dead). Each expression decides this once and passes
+    * the answer in.
     */
-  def mayNull(e: Expression): Boolean =
-    e.dataType.asInstanceOf[ArrayType].containsNull
+  def mayNull(dt: DataType): Boolean =
+    dt.asInstanceOf[ArrayType].containsNull
+
+  def isFloat(dt: DataType): Boolean =
+    dt.asInstanceOf[ArrayType].elementType == FloatType
+
+  def anyNull(x: ArrayData): Boolean = {
+    val n = x.numElements()
+    var i = 0
+    while (i < n) {
+      if (x.isNullAt(i)) return true
+      i += 1
+    }
+    false
+  }
+
+  private def at(x: ArrayData, f: Boolean, i: Int): Double =
+    if (f) x.getFloat(i).toDouble else x.getDouble(i)
+
+  /** Σ xᵢ·yᵢ over equal-length vectors with no NULL element. */
+  def dotFold(x: ArrayData, xf: Boolean,
+              y: ArrayData, yf: Boolean): Double = {
+    val n = x.numElements()
+    var s = 0.0
+    var i = 0
+    while (i < n) {
+      s += at(x, xf, i) * at(y, yf, i)
+      i += 1
+    }
+    s
+  }
+
+  /** Σ (xᵢ − yᵢ)² over equal-length vectors with no NULL element. */
+  def l2sqFold(x: ArrayData, xf: Boolean,
+               y: ArrayData, yf: Boolean): Double = {
+    val n = x.numElements()
+    var s = 0.0
+    var i = 0
+    while (i < n) {
+      val d = at(x, xf, i) - at(y, yf, i)
+      s += d * d
+      i += 1
+    }
+    s
+  }
+
+  private def metricNull(x: ArrayData, y: ArrayData,
+                         nullable: Boolean): Boolean =
+    x.numElements() != y.numElements() ||
+      nullable && (anyNull(x) || anyNull(y))
+
+  def dot(x: ArrayData, xf: Boolean, y: ArrayData, yf: Boolean,
+          nullable: Boolean): java.lang.Double =
+    if (metricNull(x, y, nullable)) null
+    else java.lang.Double.valueOf(dotFold(x, xf, y, yf))
+
+  def l2sq(x: ArrayData, xf: Boolean, y: ArrayData, yf: Boolean,
+           nullable: Boolean): java.lang.Double =
+    if (metricNull(x, y, nullable)) null
+    else java.lang.Double.valueOf(l2sqFold(x, xf, y, yf))
+
+  /** √(Σ xᵢ²): the dot fold of `x` with itself, so each term is the
+    * same vᵢ·vᵢ product.
+    */
+  def norm(x: ArrayData, xf: Boolean, nullable: Boolean): java.lang.Double =
+    if (nullable && anyNull(x)) null
+    else java.lang.Double.valueOf(math.sqrt(dotFold(x, xf, x, xf)))
+
+  /** Java source that stores a helper call's boxed result into `ev`:
+    * a null box sets `ev.isNull`, anything else is unboxed by
+    * `unbox`.
+    */
+  def unboxInto(ctx: CodegenContext, ev: ExprCode, box: String,
+                call: String, unbox: String => String): String = {
+    val b = ctx.freshName("boxed")
+    s"""
+       |$box $b = $call;
+       |if ($b == null) {
+       |  ${ev.isNull} = true;
+       |} else {
+       |  ${ev.value} = ${unbox(b)};
+       |}
+     """.stripMargin
+  }
+
+  /** [[unboxInto]] for the three double-valued kernels below. */
+  def doubleInto(ctx: CodegenContext, ev: ExprCode, call: String): String =
+    unboxInto(ctx, ev, "java.lang.Double",
+      s"org.apache.spark.sql.graft.VecKernelUtil.$call",
+      b => s"$b.doubleValue()")
 }
 
-import VecKernelUtil.mayNull
+import VecKernelUtil.{isFloat, mayNull}
 
 /** Native, codegen'd float-vector kernels. The higher-order-function
   * form (`aggregate(zip_with(...))`) evaluates a lambda per element —
   * per-element virtual calls and boxed closures on the hottest loop of
-  * similarity search. These expressions compile to a tight primitive
-  * loop inside WholeStageCodegen instead.
-  *
-  * Numerics are the exact IEEE754 sequence of the HOF form (and the
-  * DuckDB oracles): left-to-right accumulation in double, each float
-  * upcast exactly, so swapping the implementations never changes a
-  * single bit of output.
+  * similarity search. These expressions run one compiled primitive
+  * loop per row instead. Each kernel's math lives in one
+  * [[VecKernelUtil]] helper: `eval` calls it and `doGenCode` only
+  * emits a call to it, so swapping the implementations never changes
+  * a single bit of output.
   */
 case class VecDot(left: Expression, right: Expression)
     extends BinaryExpression with ExpectsInputTypes {
@@ -44,70 +140,18 @@ case class VecDot(left: Expression, right: Expression)
   override def nullable: Boolean = true
   override def prettyName: String = "vec_dot"
 
-  private def elemGetter(e: Expression): String =
-    e.dataType.asInstanceOf[ArrayType].elementType match {
-      case FloatType => "getFloat"
-      case _ => "getDouble"
-    }
+  private lazy val lf = isFloat(left.dataType)
+  private lazy val rf = isFloat(right.dataType)
+  private lazy val elemNull =
+    mayNull(left.dataType) || mayNull(right.dataType)
 
-  // null on length mismatch OR any NULL element — matching the
-  // zip_with+aggregate fold this kernel replaces (zip_with pads with
-  // null, the fold poisons to NULL; getFloat on a null slot would
-  // silently read 0.0 and produce a confidently wrong score)
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val a = left.eval(input)
-    val b = right.eval(input)
-    if (a == null || b == null) return null
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    if (x.numElements() != y.numElements()) return null
-    val lf = left.dataType.asInstanceOf[ArrayType].elementType == FloatType
-    val rf = right.dataType.asInstanceOf[ArrayType].elementType == FloatType
-    val nullable = mayNull(left) || mayNull(right)
-    val n = x.numElements()
-    var s = 0.0
-    var i = 0
-    while (i < n) {
-      if (nullable && (x.isNullAt(i) || y.isNullAt(i))) return null
-      val xi = if (lf) x.getFloat(i).toDouble else x.getDouble(i)
-      val yi = if (rf) y.getFloat(i).toDouble else y.getDouble(i)
-      s += xi * yi
-      i += 1
-    }
-    s
-  }
+  override def nullSafeEval(a: Any, b: Any): Any =
+    VecKernelUtil.dot(a.asInstanceOf[ArrayData], lf,
+      b.asInstanceOf[ArrayData], rf, elemNull)
 
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val s = ctx.freshName("s")
-      val ga = elemGetter(left)
-      val gb = elemGetter(right)
-      // the null-bit probe only compiles in when the SCHEMA says
-      // elements can be null: a branch in this multiply-add loop
-      // costs ~2x on the ANN hot path (it defeats vectorization),
-      // and containsNull=false makes it provably dead code
-      val guard =
-        if (mayNull(left) || mayNull(right))
-          s"""if ($a.isNullAt($i) || $b.isNullAt($i)) {
-             |      ${ev.isNull} = true; break;
-             |    }""".stripMargin
-        else ""
-      s"""
-         |if ($a.numElements() != $b.numElements()) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  int $n = $a.numElements();
-         |  double $s = 0.0;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    $guard
-         |    $s += (double) $a.$ga($i) * (double) $b.$gb($i);
-         |  }
-         |  if (!${ev.isNull}) ${ev.value} = $s;
-         |}
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, (a, b) => VecKernelUtil.doubleInto(ctx, ev,
+      s"dot($a, $lf, $b, $rf, $elemNull)"))
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): VecDot =
@@ -115,10 +159,9 @@ case class VecDot(left: Expression, right: Expression)
 }
 
 /** Squared L2 distance of two float vectors — the PQ codeword
-  * assignment metric. Same kernel shape and numeric contract as
-  * [[VecDot]]: left-to-right double accumulation of (xᵢ − yᵢ)², so
-  * the DuckDB oracle's elementwise `list_reduce` fold matches bit for
-  * bit; null on null input or length mismatch.
+  * assignment metric. Same shape and numeric contract as [[VecDot]]:
+  * left-to-right double accumulation of (xᵢ − yᵢ)², so the DuckDB
+  * oracle's elementwise `list_reduce` fold matches bit for bit.
   */
 case class VecL2Sq(left: Expression, right: Expression)
     extends BinaryExpression with ExpectsInputTypes {
@@ -130,73 +173,25 @@ case class VecL2Sq(left: Expression, right: Expression)
   override def nullable: Boolean = true
   override def prettyName: String = "vec_l2sq"
 
-  private def elemGetter(e: Expression): String =
-    e.dataType.asInstanceOf[ArrayType].elementType match {
-      case FloatType => "getFloat"
-      case _ => "getDouble"
-    }
+  private lazy val lf = isFloat(left.dataType)
+  private lazy val rf = isFloat(right.dataType)
+  private lazy val elemNull =
+    mayNull(left.dataType) || mayNull(right.dataType)
 
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val a = left.eval(input)
-    val b = right.eval(input)
-    if (a == null || b == null) return null
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    if (x.numElements() != y.numElements()) return null
-    val lf = left.dataType.asInstanceOf[ArrayType].elementType == FloatType
-    val rf = right.dataType.asInstanceOf[ArrayType].elementType == FloatType
-    val nullable = mayNull(left) || mayNull(right)
-    val n = x.numElements()
-    var s = 0.0
-    var i = 0
-    while (i < n) {
-      if (nullable && (x.isNullAt(i) || y.isNullAt(i))) return null
-      val xi = if (lf) x.getFloat(i).toDouble else x.getDouble(i)
-      val yi = if (rf) y.getFloat(i).toDouble else y.getDouble(i)
-      val d = xi - yi
-      s += d * d
-      i += 1
-    }
-    s
-  }
+  override def nullSafeEval(a: Any, b: Any): Any =
+    VecKernelUtil.l2sq(a.asInstanceOf[ArrayData], lf,
+      b.asInstanceOf[ArrayData], rf, elemNull)
 
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val s = ctx.freshName("s")
-      val d = ctx.freshName("d")
-      val ga = elemGetter(left)
-      val gb = elemGetter(right)
-      // same schema-gated null-bit probe as VecDot
-      val guard =
-        if (mayNull(left) || mayNull(right))
-          s"""if ($a.isNullAt($i) || $b.isNullAt($i)) {
-             |      ${ev.isNull} = true; break;
-             |    }""".stripMargin
-        else ""
-      s"""
-         |if ($a.numElements() != $b.numElements()) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  int $n = $a.numElements();
-         |  double $s = 0.0;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    $guard
-         |    double $d = (double) $a.$ga($i) - (double) $b.$gb($i);
-         |    $s += $d * $d;
-         |  }
-         |  if (!${ev.isNull}) ${ev.value} = $s;
-         |}
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, (a, b) => VecKernelUtil.doubleInto(ctx, ev,
+      s"l2sq($a, $lf, $b, $rf, $elemNull)"))
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): VecL2Sq =
     copy(left = newLeft, right = newRight)
 }
 
-/** Euclidean norm of a float vector — same kernel shape as [[VecDot]]. */
+/** Euclidean norm of a float vector — same shape as [[VecDot]]. */
 case class VecNorm(child: Expression)
     extends UnaryExpression with ExpectsInputTypes {
 
@@ -208,56 +203,21 @@ case class VecNorm(child: Expression)
   override def nullable: Boolean = true
   override def prettyName: String = "vec_norm"
 
-  private def isFloat: Boolean =
-    child.dataType.asInstanceOf[ArrayType].elementType == FloatType
+  private lazy val f = isFloat(child.dataType)
+  private lazy val elemNull = mayNull(child.dataType)
 
-  override def nullSafeEval(a: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val f = isFloat
-    val nullable = mayNull(child)
-    val n = x.numElements()
-    var s = 0.0
-    var i = 0
-    while (i < n) {
-      if (nullable && x.isNullAt(i)) return null
-      val v = if (f) x.getFloat(i).toDouble else x.getDouble(i)
-      s += v * v
-      i += 1
-    }
-    math.sqrt(s)
-  }
+  override def nullSafeEval(a: Any): Any =
+    VecKernelUtil.norm(a.asInstanceOf[ArrayData], f, elemNull)
 
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val s = ctx.freshName("s")
-      val v = ctx.freshName("v")
-      val g = if (isFloat) "getFloat" else "getDouble"
-      // same schema-gated null-bit probe as VecDot
-      val guard =
-        if (mayNull(child))
-          s"if ($a.isNullAt($i)) { ${ev.isNull} = true; break; }"
-        else ""
-      s"""
-         |int $n = $a.numElements();
-         |double $s = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $guard
-         |  double $v = (double) $a.$g($i);
-         |  $s += $v * $v;
-         |}
-         |if (!${ev.isNull}) ${ev.value} = java.lang.Math.sqrt($s);
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, a => VecKernelUtil.doubleInto(ctx, ev,
+      s"norm($a, $f, $elemNull)"))
 
   override protected def withNewChildInternal(newChild: Expression): VecNorm =
     copy(child = newChild)
 }
 
-/** Column wrappers over the native kernels (the sql-package half of
-  * graft.functions.VectorFunctions).
-  */
+/** Column wrappers over the native kernels. */
 object VectorColumns {
   def vec_dot(a: Column, b: Column): Column =
     ExpressionUtils.column(VecDot(

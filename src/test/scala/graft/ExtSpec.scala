@@ -1541,7 +1541,7 @@ class ExtSpec extends SparkSpec {
   // -- Native vector kernels -------------------------------------------
 
   test("hilbert_index is callable from SQL; bits must be a literal") {
-    graft.functions.VectorFunctions.register(spark)
+    org.apache.spark.sql.graft.VectorColumns.register(spark)
     Seq((3L, 5L)).toDF("x", "y").createOrReplaceTempView("hilbert_sql_t")
     val got = spark.sql(
       "SELECT hilbert_index(x, y, 8) AS h FROM hilbert_sql_t")
@@ -1583,9 +1583,9 @@ class ExtSpec extends SparkSpec {
       zip_with($"vec", $"vec", (x, y) => x.cast("double") * y.cast("double")),
       lit(0.0), (acc, x) => acc + x)
     val rows = vecs.select(
-      graft.functions.VectorFunctions.vec_dot($"vec", $"vec").as("nd"),
+      org.apache.spark.sql.graft.VectorColumns.vec_dot($"vec", $"vec").as("nd"),
       hofDot.as("hd"),
-      graft.functions.VectorFunctions.vec_norm($"vec").as("nn"),
+      org.apache.spark.sql.graft.VectorColumns.vec_norm($"vec").as("nn"),
       sqrt(hofDot).as("hn"))
       .as[(Double, Double, Double, Double)].collect()
     rows.foreach { case (nd, hd, nn, hn) =>
@@ -1599,13 +1599,14 @@ class ExtSpec extends SparkSpec {
   test("VecDot is null on null input") {
     val df = Seq((Some(Seq(1f, 2f)), None: Option[Seq[Float]])).toDF("a", "b")
     val got = df.select(
-      graft.functions.VectorFunctions.vec_dot($"a", $"b")).collect().head
+      org.apache.spark.sql.graft.VectorColumns.vec_dot($"a", $"b"))
+      .collect().head
     assert(got.isNullAt(0))
   }
 
   test("VecDot/VecL2Sq/VecNorm poison to NULL on a NULL ELEMENT — " +
       "the zip_with+aggregate fold's contract, never a silent 0.0") {
-    import graft.functions.VectorFunctions._
+    import org.apache.spark.sql.graft.VectorColumns._
     val df = Seq(
       (1L, Seq[Option[Float]](Some(1f), None), Seq[Option[Float]](Some(2f), Some(5f))),
       (2L, Seq[Option[Float]](Some(1f), Some(3f)), Seq[Option[Float]](Some(2f), Some(5f))))
@@ -1619,7 +1620,7 @@ class ExtSpec extends SparkSpec {
     // wrong-arity SQL calls fail with the function named, not an
     // IndexOutOfBoundsException — both registration paths share the
     // guarded builders
-    graft.functions.VectorFunctions.register(spark)
+    org.apache.spark.sql.graft.VectorColumns.register(spark)
     Seq((1L, Seq(1f, 2f))).toDF("id", "v")
       .createOrReplaceTempView("vec_arity_t")
     val e = intercept[Exception] {
@@ -5409,12 +5410,12 @@ class ExtSpec extends SparkSpec {
   test("VecDot: null on length mismatch; double arrays accepted") {
     val df = Seq((Seq(1f, 2f), Seq(1f, 2f, 3f))).toDF("a", "b")
     assert(df.select(
-      graft.functions.VectorFunctions.vec_dot($"a", $"b"))
+      org.apache.spark.sql.graft.VectorColumns.vec_dot($"a", $"b"))
       .collect().head.isNullAt(0))
     val dd = Seq((Seq(1.5, 2.0), Seq(2.0, 3.0))).toDF("a", "b")
     val got = dd.select(
-      graft.functions.VectorFunctions.vec_dot($"a", $"b"),
-      graft.functions.VectorFunctions.vec_norm($"a"))
+      org.apache.spark.sql.graft.VectorColumns.vec_dot($"a", $"b"),
+      org.apache.spark.sql.graft.VectorColumns.vec_norm($"a"))
       .as[(Double, Double)].collect().head
     assert(got._1 === 1.5 * 2.0 + 2.0 * 3.0)
     assert(got._2 === math.sqrt(1.5 * 1.5 + 2.0 * 2.0))
@@ -5674,7 +5675,7 @@ class ExtSpec extends SparkSpec {
     assert(got(4L) === null)
     assert(got(5L) === "à et ô")
     // SQL surface via the imperative registry
-    graft.functions.VectorFunctions.register(spark)
+    org.apache.spark.sql.graft.VectorColumns.register(spark)
     df.createOrReplaceTempView("nfc_in")
     val viaSql = spark.sql(
       "SELECT id, nfc_normalize(t) FROM nfc_in WHERE id = 1")

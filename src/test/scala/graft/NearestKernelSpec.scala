@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.NearestColumns
+import org.apache.spark.sql.graft.{AdcColumns, NearestColumns, VectorColumns}
 import org.apache.spark.sql.types._
 
 /** Focused spec for the round-19 native nearest-candidate kernels
@@ -102,12 +102,12 @@ class NearestKernelSpec extends SparkSpec {
       : Map[Long, Option[Long]] = {
     val cb = centsDf(cents)
       .withColumn("__cn",
-        graft.functions.VectorFunctions.vec_norm(col("__cv")))
+        VectorColumns.vec_norm(col("__cv")))
       .agg(collect_list(struct(col("__cid"), col("__cv"), col("__cn")))
         .as("__cb"))
     ptsDf(pts)
       .withColumn("__pn",
-        graft.functions.VectorFunctions.vec_norm(col("vec")))
+        VectorColumns.vec_norm(col("vec")))
       .crossJoin(broadcast(cb))
       .select(col("id"),
         NearestColumns.vec_argmax_cos(col("vec"), col("__pn"), col("__cb"))
@@ -187,7 +187,7 @@ class NearestKernelSpec extends SparkSpec {
       "inputs including exact ties and mismatched-dims candidates " +
       "(ADVICE r19: pin against the REAL aggregate, not only the " +
       "hand-rolled reference)") {
-    import graft.functions.VectorFunctions._
+    import VectorColumns._
     // engineered corners: a duplicate centroid vector (exact metric
     // tie) and two mismatched-dims candidates (null-metric tier)
     val sharedVec = randVec(6)
@@ -228,22 +228,168 @@ class NearestKernelSpec extends SparkSpec {
     }
   }
 
-  test("kernels agree between codegen and interpreted eval") {
-    val cents = Seq((1L, randVec(8)), (2L, randVec(8)), (3L, randVec(5)))
-    val pts = (1L to 20L).map(i => (i, randVec(8)))
-    val viaCodegen = runArgmaxCos(pts, cents)
-    val viaCodegenL2 = runArgminL2(pts, cents)
+  /** `body` run through interpreted eval only: no whole-stage
+    * codegen and the NO_CODEGEN expression factory.
+    */
+  private def interpreted[T](body: => T): T = {
     val conf = spark.conf
     val before = conf.get("spark.sql.codegen.factoryMode", "FALLBACK")
     val beforeWs = conf.get("spark.sql.codegen.wholeStage", "true")
     try {
       conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
       conf.set("spark.sql.codegen.wholeStage", "false")
-      assert(runArgmaxCos(pts, cents) === viaCodegen)
-      assert(runArgminL2(pts, cents) === viaCodegenL2)
+      body
     } finally {
       conf.set("spark.sql.codegen.factoryMode", before)
       conf.set("spark.sql.codegen.wholeStage", beforeWs)
     }
+  }
+
+  /** `df()` collected once through generated code and once
+    * [[interpreted]]; rows sorted by their first (id) column, doubles
+    * as their bits.
+    */
+  private def bothPaths(df: () => DataFrame)
+      : (Seq[Seq[Any]], Seq[Seq[Any]]) = {
+    def run(): Seq[Seq[Any]] = df().collect().toSeq
+      .map(_.toSeq.map {
+        case d: Double => java.lang.Double.doubleToLongBits(d)
+        case v => v
+      })
+      .sortBy(_.head.asInstanceOf[Long])
+    (run(), interpreted(run()))
+  }
+
+  private def rowsDf(rows: Seq[Row], fields: StructField*): DataFrame =
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 2),
+      StructType(StructField("id", LongType, nullable = false) +: fields))
+
+  private def floats(xs: Any*): Seq[java.lang.Float] = xs.map {
+    case null => null
+    case x: Double => java.lang.Float.valueOf(x.toFloat)
+    case x: Int => java.lang.Float.valueOf(x.toFloat)
+  }
+  private def randFloats(d: Int): Seq[java.lang.Float] =
+    floats(randVec(d): _*)
+
+  test("kernels agree between codegen and interpreted eval") {
+    val cents = Seq((1L, randVec(8)), (2L, randVec(8)), (3L, randVec(5)))
+    val pts = (1L to 20L).map(i => (i, randVec(8)))
+    val viaCodegen = runArgmaxCos(pts, cents)
+    val viaCodegenL2 = runArgminL2(pts, cents)
+    interpreted {
+      assert(runArgmaxCos(pts, cents) === viaCodegen)
+      assert(runArgminL2(pts, cents) === viaCodegenL2)
+    }
+
+    // vec_dot / vec_l2sq / vec_norm over float and double elements,
+    // containsNull = true (the per-element probes live) and false:
+    // a NULL element, a length mismatch, empty vectors, a NULL vector
+    val vecRows =
+      Seq(
+        Row(1L, floats(1, 2, 3), floats(4, 5, 6),
+          Seq(0.5, -1.25, 2.0), floats(1, 2, 3)),
+        Row(2L, floats(1, null, 3), floats(4, 5, 6),
+          Seq(1.0, null, 2.0), floats(7, 8, 9)),
+        Row(3L, floats(1, 2), floats(4, 5, 6), Seq(1.0, 2.0), floats(1, 2)),
+        Row(4L, floats(), floats(), Seq(), floats()),
+        Row(5L, null, floats(1), null, floats(1))) ++
+      (6L to 25L).map(i => Row(i, randFloats(8), randFloats(8),
+        randVec(8), randFloats(8)))
+    val (vecGen, vecInt) = bothPaths(() => rowsDf(vecRows,
+        StructField("fa", ArrayType(FloatType, containsNull = true)),
+        StructField("fb", ArrayType(FloatType, containsNull = true)),
+        StructField("da", ArrayType(DoubleType, containsNull = true)),
+        StructField("fn", ArrayType(FloatType, containsNull = false)))
+      .select(col("id"),
+        VectorColumns.vec_dot(col("fa"), col("fb")),
+        VectorColumns.vec_dot(col("fa"), col("da")),
+        VectorColumns.vec_dot(col("da"), col("da")),
+        VectorColumns.vec_dot(col("fn"), col("fn")),
+        VectorColumns.vec_l2sq(col("fa"), col("fb")),
+        VectorColumns.vec_l2sq(col("da"), col("fa")),
+        VectorColumns.vec_l2sq(col("fn"), col("fa")),
+        VectorColumns.vec_norm(col("fa")),
+        VectorColumns.vec_norm(col("da")),
+        VectorColumns.vec_norm(col("fn"))))
+    assert(vecInt === vecGen)
+    def bits(d: Double) = java.lang.Double.doubleToLongBits(d)
+    assert(vecGen(0).slice(1, 2) === Seq(bits(32.0)))
+    assert(vecGen(1).slice(1, 4) === Seq(null, null, null)) // NULL elem
+    assert(vecGen(2)(1) === null) // length mismatch
+    assert(vecGen(3).tail.forall(_ == bits(0.0))) // empty vectors
+
+    // argmax / argmin: an empty candidate array, a null cid (ignored
+    // even where its vector would win), a NULL element in the point
+    // or a candidate, a length mismatch, a NULL cn, exact ties, float
+    // candidates with long cids and double ones with int cids
+    val tieVec = randFloats(4)
+    def cand(cid: java.lang.Long, cv: Seq[java.lang.Float]): Row =
+      Row(cid, cv, if (cv == null || cv.contains(null)) null
+        else java.lang.Double.valueOf(
+          math.sqrt(cv.map(x => x.toDouble * x.toDouble).sum)))
+    def randCands(n: Int): Seq[Row] =
+      (1 to n).map(c => cand(java.lang.Long.valueOf(10L + c), randFloats(4)))
+    val nearRows = Seq(
+      Row(1L, randFloats(4), randCands(5)),
+      Row(2L, randFloats(4), Seq()),
+      Row(3L, tieVec, Seq(cand(null, tieVec)) ++ randCands(2)),
+      Row(4L, floats(0.5, null, 1, 2), randCands(3)),
+      Row(5L, randFloats(4), Seq(
+        cand(7L, floats(1, null, 1, 1)), cand(8L, randFloats(3)),
+        Row(9L, randFloats(4), null)) ++ randCands(2)),
+      Row(6L, randFloats(4), Seq(cand(31L, randFloats(3)),
+        cand(30L, randFloats(5)))),
+      Row(7L, tieVec, Seq(cand(21L, tieVec), cand(20L, tieVec)) ++
+        randCands(2))) ++
+      (8L to 30L).map(i => Row(i, randFloats(4),
+        randCands(1 + (i % 6).toInt)))
+    val candType = ArrayType(StructType(Seq(
+      StructField("cid", LongType),
+      StructField("cv", ArrayType(FloatType, containsNull = true)),
+      StructField("cn", DoubleType))), containsNull = true)
+    val (nearGen, nearInt) = bothPaths(() => rowsDf(nearRows,
+        StructField("v", ArrayType(FloatType, containsNull = true)),
+        StructField("cands", candType))
+      .withColumn("l2cands", transform(col("cands"), c => struct(
+        c("cid").cast("int").as("cid"),
+        c("cv").cast("array<double>").as("cv"))))
+      .select(col("id"),
+        NearestColumns.vec_argmax_cos(col("v"),
+          coalesce(VectorColumns.vec_norm(col("v")), lit(1.0)),
+          col("cands")),
+        NearestColumns.vec_argmin_l2(col("v"), col("l2cands"))))
+    assert(nearInt === nearGen)
+    assert(nearGen(1) === Seq(2L, null, null)) // no candidate
+    // the null-cid twin of the point is skipped, not read as cid 0
+    assert(Seq(11L, 12L).contains(nearGen(2)(1)))
+    assert(Seq(11, 12).contains(nearGen(2)(2)))
+    assert(nearGen(3) === Seq(4L, 11L, 11)) // NULL point element
+    assert(nearGen(4)(2) === 7) // the null tier leads the argmin
+    assert(nearGen(5) === Seq(6L, 30L, 30)) // only mismatches
+    assert(nearGen(6) === Seq(7L, 20L, 20)) // exact tie → smaller cid
+
+    // adc_sum_flat: NULL code entries, NULL j/r fields, NULL table
+    // cells, empty codes, NULL codes
+    def code(j: Integer, r: Integer): Row = Row(j, r)
+    val tbl = (0 until 12).map(i => java.lang.Long.valueOf(i.toLong))
+    val adcRows = Seq(
+      Row(1L, Seq(code(0, 1), code(1, 2), code(2, 3)), tbl),
+      Row(2L, Seq(code(0, 1), null, code(null, 2), code(2, null),
+        code(2, 3)), tbl.updated(11, null)),
+      Row(3L, Seq(), tbl),
+      Row(4L, null, tbl)) ++
+      (5L to 20L).map(i => Row(i,
+        (0 until 3).map(j => code(j, rng.nextInt(4))), tbl))
+    val (adcGen, adcInt) = bothPaths(() => rowsDf(adcRows,
+        StructField("codes", ArrayType(StructType(Seq(
+          StructField("j", IntegerType), StructField("r", IntegerType))),
+          containsNull = true)),
+        StructField("tbl", ArrayType(LongType, containsNull = true)))
+      .select(col("id"),
+        AdcColumns.adc_sum_flat(col("codes"), col("tbl"), 4)))
+    assert(adcInt === adcGen)
+    assert(adcGen.take(4) === Seq(Seq(1L, 18L), Seq(2L, 1L), Seq(3L, 0L),
+      Seq(4L, null)))
   }
 }

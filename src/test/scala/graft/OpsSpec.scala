@@ -68,9 +68,6 @@ class OpsSpec extends SparkSpec {
       val got = Dedup.lastWins(df, Seq("k"), $"seq", Seq("v"))
         .as[(String, String)].collect().toMap
       assert(got === expected)
-      val gotW = Dedup.lastWinsWindow(df, Seq("k"), $"seq")
-        .select($"k", $"v").as[(String, String)].collect().toMap
-      assert(gotW === expected)
     }
   }
 
