@@ -1,235 +1,150 @@
 package graft
 
-import scala.collection.mutable.ArrayBuffer
+import scala.collection.mutable
+import scala.util.control.NonFatal
 
-import graft.tools.TaskStats
-import graft.tools.TaskStats.fmtBytes
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow}
 
-/** 1× → 10× → 100× growth-exponent measurement (dev tool): times the
-  * heavy shared stages (`cc_labels`, `pr_graph`, `shingle_pairs`) and
-  * their flagship consumers (`dedup_substring`, `curate_pretrain`,
-  * `dedup_ngram_jaccard`, `graph_pagerank`) at three data tiers —
-  * sf0.1 as 1×, the replica-scaled 10× and 100× fixtures
-  * ([[ScaleFixtures]]) — and reports the measured scaling exponent
-  * α = log₁₀(t_next / t_prev) per hop. α ≈ 1 is linear; the plan
-  * audits (PlanSpec) argue no stage is super-linear BY CONSTRUCTION,
-  * this run pins it BY MEASUREMENT, the last evidence the "plans
-  * you'd want at 100×" story needs.
+import graft.queries.ExtensionQueries
+
+/** Scale run (dev tool): times every shared stage and every named
+  * query over the source fixtures (1×) and their replica-scaled tiers
+  * ([[ScaleFixtures]]), and writes SF10_SMOKE.md with each row's
+  * minimum time per tier, the measured growth exponent α per hop, row
+  * counts and two plan flags. α ≈ 1 is linear; the plan audits
+  * (PlanSpec) argue no stage is super-linear by construction, this
+  * run checks it by measurement.
   *
-  * Also instruments `shingle_pairs`' run-to-run spread (historically
-  * 8.2–18.2 s at 10×) with per-run task/shuffle telemetry: if shuffle
-  * bytes and summed task time are stable while wall varies, the
-  * spread is ambient (scheduling/IO/GC), not data skew; if max-task
-  * or summed task time moves with the wall, it is skew (hot posting
-  * lists). Writes SF10_SMOKE.md.
+  * `runMain graft.ScaleExponents <srcDir> [reps] [factors] [q1,q2,...]`
+  * — `reps` defaults to 2, `factors` to `10,100` (the k× tier is
+  * generated into `target/x<k>`), the queries to every
+  * [[SparkEntry.queries]] name. Tiers and the record are written
+  * relative to the cwd.
   *
-  * Stage timings are FRESH builds: the memo is evicted before every
-  * rep, so each sample pays the full build, never a checkpoint read.
+  * Each rep evicts every stage and rebuilds the stage table through
+  * `prebuildStages` (fresh builds, never a memo hit), then times each
+  * query over the built stages through `queryExecution.toRdd.count()`.
+  * Not `df.count()`: that plans a new Aggregate in which Catalyst drops
+  * row-preserving joins (graph_pagerank's rank joins vanish), so it
+  * under-times such queries. A query that fails records its error
+  * class in its row and the run goes on.
   */
 object ScaleExponents {
+
+  /** One row at one tier: the minimum seconds over the reps, the row
+    * count, the plan flags and the error class of a failed rep.
+    */
+  private final case class Cell(secs: Double = Double.PositiveInfinity,
+                                rows: Option[Long] = None,
+                                flags: Seq[String] = Nil,
+                                error: Option[String] = None) {
+    def ok: Boolean = error.isEmpty && !secs.isInfinite
+    def time: String = error.getOrElse(if (ok) f"$secs%.2f" else "—")
+  }
 
   def main(args: Array[String]): Unit = {
     val srcDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val reps = args.lift(1).map(_.toInt).getOrElse(2)
-    val probeRuns = args.lift(2).map(_.toInt).getOrElse(6)
+    val factors = args.lift(2).map(_.split(',').toSeq.map(_.toInt))
+      .getOrElse(Seq(10, 100))
+    val names = args.lift(3).map(_.split(',').toSeq)
+      .getOrElse(SparkEntry.queries.keys.toSeq.sorted)
     val spark = Session.local()
-    val stats = TaskStats.attach(spark.sparkContext)
+    try run(spark, srcDir, reps, factors, names, ".")
+    finally spark.stop()
+  }
 
-    ScaleFixtures.ensure(spark, srcDir, "target/sf1", 10)
-    ScaleFixtures.ensure(spark, srcDir, "target/sf10", 100)
+  /** `CartesianProduct` in the executed plan; `global-window` for a
+    * Window with no partition spec in the optimized plan.
+    */
+  private def planFlags(df: DataFrame): Seq[String] = {
+    val qe = df.queryExecution
+    Seq(
+      "CartesianProduct" ->
+        qe.executedPlan.toString.contains("CartesianProduct"),
+      "global-window" -> qe.optimizedPlan.collectFirst {
+        case w: LWindow if w.partitionSpec.isEmpty => w }.isDefined)
+      .collect { case (flag, true) => flag }
+  }
 
-    val tiers = Seq(("1x", srcDir), ("10x", "target/sf1"),
-      ("100x", "target/sf10"))
-    // the heavy shared stages, each timed as a fresh build per rep
-    // (evict → build → count)
-    val stageTargets = Seq("cc_labels", "pr_graph", "shingle_pairs",
-      // the corpus-scaling half of the IVF-PQ twins: the QUERY rows
-      // read the warm candidate checkpoint (flat at any scale — that
-      // is the design), so the scaling evidence must come from this
-      // stage's fresh rebuild (codebook/codes memos stay warm across
-      // reps: the row isolates the coarse-assign -> probe -> ADC part)
-      "ivfpq_adc20")
-    val queries = Seq("dedup_substring", "curate_pretrain",
-      "dedup_ngram_jaccard", "graph_pagerank",
-      // round-14 touched operators: the Bloom literal fold + staged
-      // fingerprint store, the block-key spread (identity on these
-      // multi-split fixtures — the row pins that), and the fused
-      // small-budget LPA regime
-      "dedup_incremental_bloom", "dedup_editdist", "graph_lpa",
-      // round-15 touched operators: the join-free segment-explode
-      // LOCF resample (one exchange; grid rows scale with the span
-      // union) and the IVF-PQ twins off the shared ADC candidate
-      // stage (fixed 50-query probe against a growing corpus — the
-      // stage build inside rep 1 is the scan-bounded part)
-      "ts_resample_locf", "sim_ivfpq_topk", "sim_ivfpq_refine_topk",
-      // round-16 touched operator: zorder16 gained the out-of-range
-      // raise_error guard — map-side projection over events, the row
-      // pins that the guard branch stays scan-bounded (no exchange)
-      "layout_zorder",
-      // round-17 touched operators: the exchange-fusion batch —
-      // q18's FD-fused single aggregate, the unmerged-census
-      // multi-histogram MAD, the literal-centroid emit-once IVF
-      // pairs, the first-matching-band emit-once simhash join, the
-      // key-array-carrying LSH bands (the one fusion that TRADES
-      // band-shuffle bytes for the dropped pair-distinct — watch its
-      // exponent), and the min-label curate finish
-      "tpch_q18", "ts_anomaly", "dedup_cosine_ivf",
-      "dedup_simhash_pairs", "dedup_minhash_lsh", "curate_images")
-
-    // results(name)(tier) = (repTimes, rows)
-    val results =
-      scala.collection.mutable.LinkedHashMap
-        .empty[String, scala.collection.mutable.LinkedHashMap[
-          String, (Seq[Double], Long)]]
-    def put(name: String, tier: String, ts: Seq[Double],
-            rows: Long): Unit =
-      results.getOrElseUpdate(name,
-          scala.collection.mutable.LinkedHashMap.empty)
-        .put(tier, (ts, rows))
-
-    // shingle probe rows: (run, wall, task stats)
-    val probeRows = ArrayBuffer.empty[(Int, Double, TaskStats.Snapshot)]
-
-    for ((tier, dir) <- tiers) {
-      val thunks = graft.queries.ExtensionQueries.stageThunks(spark, dir)
-        .toMap
-      for (name <- stageTargets) {
-        val build = thunks(name)
-        var rows = 0L
-        val ts = (1 to reps).map { _ =>
-          graft.queries.ExtensionQueries.evictStage(spark, dir, name)
-          val t0 = System.nanoTime()
-          rows = build().count()
-          (System.nanoTime() - t0) / 1e9
-        }
-        println(f"[scale] $tier%-5s stage $name%-14s " +
-          f"${ts.map(t => f"$t%.2f").mkString("/")} s rows=$rows")
-        put(s"stage $name", tier, ts, rows)
+  /** The scale run, with the tiers and `SF10_SMOKE.md` under `root`. */
+  def run(spark: SparkSession, srcDir: String, reps: Int,
+          factors: Seq[Int], names: Seq[String], root: String): Unit = {
+    val unknown = names.filterNot(SparkEntry.queries.contains)
+    require(unknown.isEmpty, s"no such queries: ${unknown.mkString(",")}")
+    val tiers = (1, srcDir) +: factors.map { f =>
+      val dir = s"$root/target/x$f"
+      ScaleFixtures.ensure(spark, srcDir, dir, f)
+      (f, dir)
+    }
+    // cells(row)(factor)
+    val cells = mutable.LinkedHashMap.empty[String, mutable.Map[Int, Cell]]
+    def update(row: String, f: Int)(g: Cell => Cell): Cell = {
+      val byTier = cells.getOrElseUpdate(row, mutable.Map.empty)
+      val c = g(byTier.getOrElse(f, Cell()))
+      byTier(f) = c
+      c
+    }
+    for ((f, dir) <- tiers; rep <- 1 to reps) {
+      ExtensionQueries.evictStages(spark, dir)
+      for ((name, secs) <- ExtensionQueries.prebuildStages(spark, dir)) {
+        update(s"stage $name", f)(c => c.copy(secs = c.secs min secs))
+        println(f"[scale] ${f}x rep $rep stage $name: $secs%.2f s")
       }
-      // queries run against BUILT stages (the bench protocol): the
-      // stage builds above leave the memo warm for the finishes.
-      // Materialize via toRdd.count(), NOT df.count(): count() builds
-      // a new Aggregate plan in which Catalyst may eliminate
-      // row-preserving joins (graph_pagerank's rank joins vanish
-      // entirely, timing a node count instead of PageRank) — toRdd
-      // executes the query's own plan, every operator included.
-      for (name <- queries) {
-        val q = SparkEntry.queries(name)
-        var rows = 0L
-        val ts = (1 to reps).map { _ =>
-          val t0 = System.nanoTime()
-          rows = q(spark, dir).queryExecution.toRdd.count()
-          (System.nanoTime() - t0) / 1e9
+      // row counts read the memo the prebuild just filled
+      if (rep == reps)
+        for ((name, memo) <- ExtensionQueries.stageThunks(spark, dir))
+          update(s"stage $name", f)(_.copy(rows = Some(memo().count())))
+      for (name <- names) {
+        val c = update(name, f) { c =>
+          try {
+            val t0 = System.nanoTime()
+            val df = SparkEntry.queries(name)(spark, dir)
+            val rows = df.queryExecution.toRdd.count()
+            c.copy(secs = c.secs min (System.nanoTime() - t0) / 1e9,
+              rows = Some(rows), flags = planFlags(df))
+          } catch {
+            case NonFatal(e) => c.copy(error = Some(e.getClass.getSimpleName))
+          }
         }
-        println(f"[scale] $tier%-5s query $name%-14s " +
-          f"${ts.map(t => f"$t%.2f").mkString("/")} s rows=$rows")
-        put(name, tier, ts, rows)
-      }
-      // df-cap sensitivity at 100x: the replica fixture puts every
-      // cross-replica shingle above maxDf=64, so the production cap
-      // suppresses the whole replica family as boilerplate (pair
-      // output collapses, cost stays scan-bounded — the cap doing
-      // its at-scale job). This row re-runs the SAME build with the
-      // cap scaled by the replica factor (64·10), re-admitting the
-      // cross-replica posting lists, to pin the pair-GENERATION cost
-      // the capped row doesn't exercise.
-      //
-      // OPT-IN (arg 4 = "withUncapped") because the result is a
-      // NEGATIVE one, measured twice on 2026-08-14: at 100x a df-6
-      // base shingle is a df-600 posting list, cap 640 re-admits
-      // ~10^5 such lists (~2·10^5 pairs each, ~10^10 candidate pair
-      // rows), and the pair-count hash aggregate exhausted BOTH a
-      // 12 GiB heap (executor OOM, exit 52) and a 96 GiB heap
-      // (101 GiB RSS, kswapd thrash, killed at 15 min). That is the
-      // point: the cap is the pair-VOLUME governor that keeps the
-      // operator feasible at any scale; what it drops is only
-      // df>cap boilerplate shingles. See SF10_SMOKE.md.
-      if (tier == "100x" && args.lift(3).contains("withUncapped")) {
-        var rows = 0L
-        val ts = (1 to reps).map { _ =>
-          val t0 = System.nanoTime()
-          rows = graft.ext.DedupOps.pairIntersections(
-            graft.sources.Tables.load(spark, dir, "documents"),
-            Seq("lang", "source"), org.apache.spark.sql.functions
-              .col("doc_id"),
-            graft.ext.TextAnalysis.shingleHashes(
-              org.apache.spark.sql.functions.col("text"), 2),
-            maxDf = 640).count()
-          (System.nanoTime() - t0) / 1e9
-        }
-        println(f"[scale] $tier%-5s stage shingle_pairs(maxDf=640) " +
-          f"${ts.map(t => f"$t%.2f").mkString("/")} s rows=$rows")
-        put("stage shingle_pairs(maxDf=640)", tier, ts, rows)
-      }
-      // shingle_pairs spread probe at the 10x tier (the tier the
-      // historical 2.2x spread was recorded at), with telemetry
-      if (tier == "10x") {
-        for (run <- 1 to probeRuns) {
-          graft.queries.ExtensionQueries.evictStage(spark, dir,
-            "shingle_pairs")
-          stats.reset()
-          val t0 = System.nanoTime()
-          val rows = thunks("shingle_pairs")().count()
-          val wall = (System.nanoTime() - t0) / 1e9
-          val st = stats.snapshot
-          println(f"[scale] probe run $run: wall=$wall%.2f s " +
-            f"tasks=${st.tasks} sum=${st.sumS}%.1f max=${st.maxS}%.2f " +
-            f"p50=${st.p50S}%.2f gc=${st.gcS}%.1f " +
-            f"read=${fmtBytes(st.shufRead)} write=${fmtBytes(st.shufWrite)}")
-          probeRows += ((run, wall, st))
-        }
+        println(s"[scale] ${f}x rep $rep $name: best ${c.time}")
       }
     }
 
-    // ---- report --------------------------------------------------
+    val fs = tiers.map(_._1)
+    val hops = fs.zip(fs.drop(1))
     val sb = new StringBuilder
-    sb ++= "# SF10 scale exponents (1x -> 10x -> 100x)\n\n"
+    sb ++= s"# Scale exponents (${fs.map(f => s"${f}x").mkString(" -> ")})\n\n"
     sb ++= s"Replica-scaled tiers of `$srcDir` (`graft.ScaleFixtures`): " +
-      tiers.map { case (t, d) => s"$t = ${ScaleFixtures.sizes(spark, d)}" }
-        .mkString("", ", ", ". ") +
-      s"${spark.sparkContext.master}, min-of-$reps fresh " +
-      s"builds per stage (memo evicted each rep), " +
-      s"${java.time.LocalDate.now()}. " +
-      "alpha = log10 of the time ratio per 10x data hop; 1.0 is " +
-      "linear, <1 sub-linear (fixed overheads amortizing), >1 " +
-      "super-linear.\n\n"
-    sb ++= "| stage/query | 1x s | 10x s | 100x s | a(1->10) | " +
-      "a(10->100) | rows 1x | rows 10x | rows 100x |\n"
-    sb ++= "|---|---|---|---|---|---|---|---|---|\n"
-    for ((name, byTier) <- results) {
-      def best(t: String) = byTier.get(t).map(_._1.min)
-      def rows(t: String) = byTier.get(t).map(_._2)
-      val (t1, t10, t100) = (best("1x"), best("10x"), best("100x"))
-      def alpha(a: Option[Double], b: Option[Double]) = (for {
-        x <- a; y <- b if x > 0
-      } yield f"${math.log10(y / x)}%.2f").getOrElse("—")
-      sb ++= s"| `$name` | ${t1.fold("—")(t => f"$t%.2f")} | " +
-        s"${t10.fold("—")(t => f"$t%.2f")} | " +
-        s"${t100.fold("—")(t => f"$t%.2f")} | " +
-        s"${alpha(t1, t10)} | ${alpha(t10, t100)} | " +
-        s"${rows("1x").fold("—")(_.toString)} | " +
-        s"${rows("10x").fold("—")(_.toString)} | " +
-        s"${rows("100x").fold("—")(_.toString)} |\n"
+      tiers.map { case (f, d) => s"${f}x = ${ScaleFixtures.sizes(spark, d)}" }
+        .mkString(", ") +
+      s". ${spark.sparkContext.master}, min of $reps reps; each rep " +
+      "evicts and rebuilds every stage (`prebuildStages`), then runs each " +
+      "query through `toRdd.count()` over the built stages, " +
+      s"${java.time.LocalDate.now()}. alpha = log(t_next / t_prev) / " +
+      "log(data ratio) per hop: 1.0 is linear, <1 sub-linear (fixed " +
+      "overheads amortizing), >1 super-linear. Plan flags: " +
+      "`CartesianProduct` in the executed plan, `global-window` = a " +
+      "Window with no partition spec in the optimized plan.\n\n"
+    val cols = fs.map(f => s"${f}x s") ++
+      hops.map { case (a, b) => s"a($a->$b)" } ++
+      fs.map(f => s"rows ${f}x") :+ "plan flags"
+    sb ++= cols.mkString("| stage/query | ", " | ", " |\n")
+    sb ++= Seq.fill(cols.size + 1)("---").mkString("|", "|", "|\n")
+    for ((row, byTier) <- cells) {
+      val at = fs.map(f => byTier.getOrElse(f, Cell()))
+      val alphas = at.zip(at.drop(1)).zip(hops).map {
+        case ((a, b), (fa, fb)) if a.ok && b.ok && a.secs > 0 =>
+          f"${math.log(b.secs / a.secs) / math.log(fb.toDouble / fa)}%.2f"
+        case _ => "—"
+      }
+      val rows = at.map(_.rows.fold("—")(_.toString))
+      val flags = at.flatMap(_.flags).distinct.mkString(",")
+      sb ++= (at.map(_.time) ++ alphas ++ rows :+ flags)
+        .mkString(s"| `$row` | ", " | ", " |\n")
     }
-    sb ++= "\n## shingle_pairs run-to-run spread (10x, fresh builds)\n\n"
-    sb ++= "| run | wall s | tasks | sum task s | max task s | " +
-      "p50 task s | gc s | shuffle read | shuffle write |\n"
-    sb ++= "|---|---|---|---|---|---|---|---|---|\n"
-    for ((run, wall, st) <- probeRows)
-      sb ++= f"| $run | $wall%.2f | ${st.tasks} | ${st.sumS}%.1f | " +
-        f"${st.maxS}%.2f | ${st.p50S}%.2f | ${st.gcS}%.1f | " +
-        f"${fmtBytes(st.shufRead)} | ${fmtBytes(st.shufWrite)} |\n"
-    if (probeRows.nonEmpty) {
-      val walls = probeRows.map(_._2)
-      val sums = probeRows.map(_._3.sumS)
-      sb ++= f"\nwall spread ${walls.max / walls.min}%.2fx; " +
-        f"summed-task-time spread ${sums.max / sums.min}%.2fx; " +
-        "shuffle bytes per run as tabled. If wall varies while " +
-        "summed task time and shuffle bytes hold, the spread is " +
-        "ambient (scheduler/IO/GC), not data skew.\n"
-    }
-    ScaleFixtures.writeRecord("SF10_SMOKE.md", sb.toString)
-    println("[scale] wrote SF10_SMOKE.md")
-    spark.stop()
+    ScaleFixtures.writeRecord(s"$root/SF10_SMOKE.md", sb.toString)
+    println(s"[scale] wrote $root/SF10_SMOKE.md")
   }
 }

@@ -5,8 +5,8 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** Replica-based fixture scaling shared by [[Sf1Smoke]] (10×) and
-  * [[ScaleExponents]] (10× and 100×): replica k of a document carries
+/** Replica-based fixture scaling for the tiers [[ScaleExponents]]
+  * times (10× and 100× by default): replica k of a document carries
   * doc_id + k·10_000_000 and a replica-salted text prefix for k > 0,
   * so exact/near-dup structure is preserved (replica 0 is the
   * original corpus; salted replicas are near- but not exact dups of
@@ -26,7 +26,7 @@ import org.apache.spark.sql.functions._
   */
 object ScaleFixtures {
 
-  /** Writes a scaled-run record (SF1_SMOKE.md, SF10_SMOKE.md): the
+  /** Writes a scaled-run record (SF10_SMOKE.md): the
     * generated `body`, then the earlier record's text from the
     * `<!-- MANUAL ANALYSIS -->` marker on — the generator owns only the
     * header and tables, so a re-run never clobbers the hand-written
@@ -58,7 +58,7 @@ object ScaleFixtures {
     * source dir's absolute path and the factor), written LAST: a tier
     * whose `_SOURCE` is missing (a crash mid-generation, or a tier of
     * unknown origin) or names another source or factor is regenerated,
-    * every table rewritten, so a `target/sf1` made from sf0.001 is
+    * every table rewritten, so a `target/x10` made from sf0.001 is
     * never served to an sf0.01 run.
     */
   def ensure(spark: SparkSession, srcDir: String, outDir: String,

@@ -1,5 +1,7 @@
 package graft.ext
 
+import ByteReader._
+
 /** Pure-JVM container-header parsing for the public PNG / GIF / BMP /
   * JPEG image formats — byte-level, no codec dependency. Replaces the
   * hash stand-in for payloads that really are images; the reference
@@ -8,23 +10,6 @@ package graft.ext
   * BITMAPINFOHEADER layouts, JPEG: ITU-T T.81 §B.2.2 frame header).
   */
 object ImageHeader {
-
-  private def u8(b: Array[Byte], i: Int): Int = b(i) & 0xff
-
-  private def be16(b: Array[Byte], i: Int): Int =
-    (u8(b, i) << 8) | u8(b, i + 1)
-
-  private def be32(b: Array[Byte], i: Int): Int =
-    (u8(b, i) << 24) | (u8(b, i + 1) << 16) | (u8(b, i + 2) << 8) | u8(b, i + 3)
-
-  private def le16(b: Array[Byte], i: Int): Int =
-    u8(b, i) | (u8(b, i + 1) << 8)
-
-  private def le32(b: Array[Byte], i: Int): Int =
-    u8(b, i) | (u8(b, i + 1) << 8) | (u8(b, i + 2) << 16) | (u8(b, i + 3) << 24)
-
-  private def ascii(b: Array[Byte], i: Int, s: String): Boolean =
-    s.indices.forall(j => b(i + j) == s.charAt(j).toByte)
 
   /** Parse `(format, width, height)` from the container header, or
     * None for payloads that are not PNG/GIF/BMP.
@@ -142,19 +127,6 @@ object AudioHeader {
   case class Wav(channels: Int, sampleRate: Int, bitsPerSample: Int,
                  nSamples: Long)
 
-  private def u8(b: Array[Byte], i: Int): Int = b(i) & 0xff
-
-  private def le16(b: Array[Byte], i: Int): Int =
-    u8(b, i) | (u8(b, i + 1) << 8)
-
-  private def le32(b: Array[Byte], i: Int): Long =
-    (u8(b, i) | (u8(b, i + 1) << 8) | (u8(b, i + 2) << 16) |
-      (u8(b, i + 3).toLong << 24)) & 0xffffffffL
-
-  private def ascii(b: Array[Byte], i: Int, s: String): Boolean =
-    i + s.length <= b.length &&
-      s.indices.forall(j => b(i + j) == s.charAt(j).toByte)
-
   /** Parse the `fmt ` and `data` chunk headers of a RIFF/WAVE stream.
     * The data payload itself need not be present — only its declared
     * size is read, so header-only prefixes parse (the shape a sampled
@@ -170,11 +142,11 @@ object AudioHeader {
     var dataSize: Option[Long] = None
     while (i + 8 <= b.length && (fmt.isEmpty || dataSize.isEmpty)) {
       val at = i.toInt
-      val size = le32(b, at + 4)
+      val size = le32u(b, at + 4)
       // the declared chunk size must cover the 16 PCM fmt bytes we
       // read, or a truncated fmt chunk would read the next chunk's bytes
       if (ascii(b, at, "fmt ") && size >= 16 && i + 24 <= b.length)
-        fmt = Some((le16(b, at + 10), le32(b, at + 12).toInt,
+        fmt = Some((le16(b, at + 10), le32u(b, at + 12).toInt,
           le16(b, at + 22), le16(b, at + 20)))
       if (ascii(b, at, "data")) dataSize = Some(size)
       i += 8 + size + (size & 1) // chunks pad to even
@@ -387,7 +359,7 @@ object AudioHeader {
     var data: Option[(Int, Long)] = None // (offset, size)
     while (i + 8 <= b.length && (fmt.isEmpty || data.isEmpty)) {
       val at = i.toInt
-      val size = le32(b, at + 4)
+      val size = le32u(b, at + 4)
       if (ascii(b, at, "fmt ") && size >= 16 && i + 24 <= b.length) {
         val tag0 = le16(b, at + 8)
         val tag =
@@ -404,7 +376,7 @@ object AudioHeader {
             le16(b, at + 32)
           else -1
         fmt = Some((tag, le16(b, at + 10),
-          le32(b, at + 12).toInt, le16(b, at + 22), le16(b, at + 20)))
+          le32u(b, at + 12).toInt, le16(b, at + 22), le16(b, at + 20)))
       }
       if (ascii(b, at, "data")) data = Some((at + 8, size))
       i += 8 + size + (size & 1)

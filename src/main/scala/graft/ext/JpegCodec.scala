@@ -38,15 +38,11 @@ package graft.ext
   */
 object JpegDecoder {
 
+  import ByteReader.{be16, u8}
   import PixelDecoder.{MaxPixels, luma}
 
   private def fail(msg: String): Nothing =
     throw new IllegalArgumentException(s"pixel decode: JPEG: $msg")
-
-  private def u8(b: Array[Byte], i: Int): Int = b(i) & 0xff
-
-  private def be16(b: Array[Byte], i: Int): Int =
-    (u8(b, i) << 8) | u8(b, i + 1)
 
   /** Zig-zag order: index in the entropy stream → raster index. */
   private val Zigzag: Array[Int] = Array(

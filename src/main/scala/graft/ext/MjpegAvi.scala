@@ -1,5 +1,7 @@
 package graft.ext
 
+import ByteReader.{ascii, le16, le32u}
+
 /** MJPEG-in-AVI video FRAME decoding — the video twin of the
   * image/audio codecs: a real container walk plus real per-frame
   * pixel decode, built from the public AVI RIFF layout (Microsoft
@@ -29,38 +31,30 @@ object MjpegAvi {
   private def fail(msg: String): Nothing =
     throw new IllegalArgumentException(s"AVI: $msg")
 
-  private def le16(b: Array[Byte], i: Int): Int =
-    (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8)
-  private def le32(b: Array[Byte], i: Int): Long =
-    (le16(b, i) & 0xffffL) | ((le16(b, i + 2) & 0xffffL) << 16)
-  private def fourcc(b: Array[Byte], i: Int, s: String): Boolean =
-    i + 4 <= b.length && b(i) == s(0).toByte && b(i + 1) == s(1).toByte &&
-      b(i + 2) == s(2).toByte && b(i + 3) == s(3).toByte
-
   /** Header facts: None unless RIFF/'AVI ' magic; loud if the avih
     * header or MJPG 'vids' stream is missing or malformed.
     */
   def parse(b: Array[Byte]): Option[AviInfo] = {
-    if (b.length < 12 || !fourcc(b, 0, "RIFF") || !fourcc(b, 8, "AVI "))
+    if (b.length < 12 || !ascii(b, 0, "RIFF") || !ascii(b, 8, "AVI "))
       return None
     var info: AviInfo = null
     var sawMjpgVids = false
     walkChunks(b, 12, b.length) { (id, at, len) =>
-      if (id == "LIST" && fourcc(b, at, "hdrl")) {
+      if (id == "LIST" && ascii(b, at, "hdrl")) {
         walkChunks(b, at + 4, at + len) { (hid, hat, hlen) =>
           if (hid == "avih") {
             if (hlen < 56) fail(s"avih header is $hlen bytes, need 56")
             info = AviInfo(
-              width = le32(b, hat + 32).toInt,
-              height = le32(b, hat + 36).toInt,
-              usPerFrame = le32(b, hat).toInt,
-              totalFrames = le32(b, hat + 16).toInt)
-          } else if (hid == "LIST" && fourcc(b, hat, "strl")) {
+              width = le32u(b, hat + 32).toInt,
+              height = le32u(b, hat + 36).toInt,
+              usPerFrame = le32u(b, hat).toInt,
+              totalFrames = le32u(b, hat + 16).toInt)
+          } else if (hid == "LIST" && ascii(b, hat, "strl")) {
             walkChunks(b, hat + 4, hat + hlen) { (sid, sat, slen) =>
               if (sid == "strh") {
                 if (slen < 8) fail(s"strh header is $slen bytes")
-                if (fourcc(b, sat, "vids")) {
-                  if (!fourcc(b, sat + 4, "MJPG"))
+                if (ascii(b, sat, "vids")) {
+                  if (!ascii(b, sat + 4, "MJPG"))
                     fail("video stream handler is not MJPG — " +
                       "outside the Motion-JPEG subset")
                   sawMjpgVids = true
@@ -94,11 +88,11 @@ object MjpegAvi {
           (cid.endsWith("dc") || cid.endsWith("db"))) {
           out += ((no, cat, clen))
           no += 1
-        } else if (cid == "LIST" && fourcc(b, cat, "rec "))
+        } else if (cid == "LIST" && ascii(b, cat, "rec "))
           scan(cat + 4, cat + clen)
       }
     walkChunks(b, 12, b.length) { (id, at, len) =>
-      if (id == "LIST" && fourcc(b, at, "movi"))
+      if (id == "LIST" && ascii(b, at, "movi"))
         scan(at + 4, at + len)
     }
     out.toSeq
@@ -145,7 +139,7 @@ object MjpegAvi {
       if (i + 8 > until)
         fail(s"truncated chunk header at offset $i")
       val id = new String(b, i, 4, java.nio.charset.StandardCharsets.US_ASCII)
-      val len = le32(b, i + 4)
+      val len = le32u(b, i + 4)
       if (len > Int.MaxValue || i + 8 + len > until)
         fail(s"chunk $id ($len bytes at offset $i) overruns its parent")
       f(id, i + 8, len.toInt)

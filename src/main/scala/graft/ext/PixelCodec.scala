@@ -62,6 +62,8 @@ final case class Pixels(width: Int, height: Int, gray: Array[Int])
   */
 object PixelDecoder {
 
+  import ByteReader.{be32u, le16, le32, u8}
+
   /** Integer ITU-R-601-flavored luma, exact and engine-portable:
     * (77·r + 150·g + 29·b) >> 8 — coefficients sum to 256 so white
     * maps to 255, and the SQL mirror is a plain `// 256`.
@@ -78,19 +80,6 @@ object PixelDecoder {
     else if (isGif(bytes)) decodeGif(bytes)
     else if (JpegDecoder.isJpeg(bytes)) JpegDecoder.decode(bytes)
     else None
-
-  private def u8(b: Array[Byte], i: Int): Int = b(i) & 0xff
-
-  private def be32(b: Array[Byte], i: Int): Long =
-    ((u8(b, i).toLong << 24) | (u8(b, i + 1) << 16) |
-      (u8(b, i + 2) << 8) | u8(b, i + 3)) & 0xffffffffL
-
-  private def le16(b: Array[Byte], i: Int): Int =
-    u8(b, i) | (u8(b, i + 1) << 8)
-
-  private def le32(b: Array[Byte], i: Int): Int =
-    u8(b, i) | (u8(b, i + 1) << 8) | (u8(b, i + 2) << 16) |
-      (u8(b, i + 3) << 24)
 
   private def fail(msg: String): Nothing =
     throw new IllegalArgumentException(s"pixel decode: $msg")
@@ -126,7 +115,7 @@ object PixelDecoder {
     var sawEnd = false
     while (!sawEnd) {
       if (i + 8 > b.length) fail("PNG: truncated chunk header")
-      val len = be32(b, i)
+      val len = be32u(b, i)
       // bounds compare in Long: a len near Int.MaxValue-12 passes the
       // first guard, and Int addition with a nonzero i would wrap
       // negative and sneak past — surfacing as an AIOOBE from
@@ -137,12 +126,12 @@ object PixelDecoder {
       val typ = new String(b, i + 4, 4, "US-ASCII")
       val crc = new java.util.zip.CRC32
       crc.update(b, i + 4, 4 + n)
-      if (crc.getValue != be32(b, i + 8 + n))
+      if (crc.getValue != be32u(b, i + 8 + n))
         fail(s"PNG: CRC mismatch on $typ chunk")
       typ match {
         case "IHDR" =>
           if (n != 13) fail(s"PNG: IHDR length $n")
-          w = be32(b, i + 8).toInt; h = be32(b, i + 12).toInt
+          w = be32u(b, i + 8).toInt; h = be32u(b, i + 12).toInt
           bitDepth = u8(b, i + 16); colorType = u8(b, i + 17)
           if (u8(b, i + 18) != 0) fail("PNG: unknown compression method")
           if (u8(b, i + 19) != 0) fail("PNG: unknown filter method")

@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 
 /** Train-once / consume-many stage cache — the engine surface behind
   * shared pipeline artifacts (near-dup component labels, ANN
@@ -51,23 +51,25 @@ object Stages {
 
   private final class StageCell(
       val fp: Long, val sc: org.apache.spark.SparkContext,
-      build: () => DataFrame) {
-    private var computed: DataFrame = _
-    def df: DataFrame = synchronized {
-      if (computed == null) computed = build()
-      computed
+      build: () => Any) {
+    private var computed: Option[Any] = None
+    def value: Any = synchronized {
+      if (computed.isEmpty) computed = Some(build())
+      computed.get
     }
-    /** The frame iff the build already ran — eviction must not force
+    /** The value iff the build already ran — eviction must not force
       * a multi-job build just to unpersist its result. */
-    def forced: Option[DataFrame] = synchronized(Option(computed))
+    def forced: Option[Any] = synchronized(computed)
   }
 
   private val cache =
     new java.util.concurrent.ConcurrentHashMap[String, StageCell]()
 
   private def dropQuietly(cell: StageCell): Unit =
-    cell.forced.foreach(d =>
-      try d.unpersist() catch { case _: Throwable => () })
+    cell.forced.foreach {
+      case d: Dataset[_] => try d.unpersist() catch { case _: Throwable => () }
+      case _ => ()
+    }
 
   private def keyOf(s: SparkSession, name: String): String =
     s"${s.sparkContext.applicationId}|$name"
@@ -76,15 +78,23 @@ object Stages {
     * once per fingerprint. See the object scaladoc for the contract.
     */
   def stage(s: SparkSession, name: String, fingerprint: Long = 0L)
-           (build: => DataFrame): DataFrame = {
+           (build: => DataFrame): DataFrame =
+    artifact(s, name, fingerprint)(build.localCheckpoint(true))
+
+  /** [[stage]] for a driver-side value that is not a DataFrame (a
+    * collected Bloom filter, a layout written to disk): the same
+    * fingerprint swap, eviction and stopped-context sweep, with no
+    * checkpoint.
+    */
+  private[graft] def artifact[A](s: SparkSession, name: String,
+                                 fingerprint: Long)(build: => A): A = {
     val it = cache.entrySet().iterator()
     while (it.hasNext) {
       val e = it.next()
       if (e.getValue.sc.isStopped) { dropQuietly(e.getValue); it.remove() }
     }
     val key = keyOf(s, name)
-    val fresh = new StageCell(fingerprint, s.sparkContext,
-      () => build.localCheckpoint(true))
+    val fresh = new StageCell(fingerprint, s.sparkContext, () => build)
     var cell = cache.putIfAbsent(key, fresh)
     if (cell == null) cell = fresh
     else if (cell.fp != fingerprint) {
@@ -93,7 +103,7 @@ object Stages {
         dropQuietly(cell); fresh
       } else cache.getOrDefault(key, fresh) // lost a race: reuse winner
     }
-    cell.df
+    cell.value.asInstanceOf[A]
   }
 
   /** Drop (and unpersist) the stage; the next [[stage]] call

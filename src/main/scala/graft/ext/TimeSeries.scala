@@ -51,17 +51,9 @@ object TimeSeries {
     * bounding observations rather than serializing into a per-key
     * span task.
     *
-    * `preCombine = true` flips to the two-exchange shape whose FIRST
-    * exchange carries map-side-combined (key, slot) partials instead
-    * of raw events: worth the extra barrier only when many events
-    * land in the same slot (combine ratio ≳ 2× — e.g. second-level
-    * events on an hourly grid), where it cuts shuffled bytes by the
-    * ratio; at ratios near 1 it shuffles the SAME bytes twice.
-    *
     * @param events columns `key`, `ts` (timestamp), `value` (double)
     */
-  def resampleLocf(events: DataFrame, slotSeconds: Long,
-                   preCombine: Boolean = false): DataFrame = {
+  def resampleLocf(events: DataFrame, slotSeconds: Long): DataFrame = {
     require(slotSeconds >= 1, "slotSeconds must be positive")
     // FLOOR division everywhere an index is computed (`div` truncates
     // toward zero): a pre-1970 timestamp must bucket to the slot AT OR
@@ -88,8 +80,7 @@ object TimeSeries {
       // (key, NULL) row would sort FIRST in the keyed window and
       // leak its value into the next real observation's carry
       .filter(col("__i").isNotNull)
-    val slotted = (if (preCombine) indexed
-      else indexed.repartition(col("key")))
+    val slotted = indexed.repartition(col("key"))
       .groupBy("key", "__i").agg(max("value").as("v"))
     // ONE window spec serves both functions (one sort, one Window
     // exec). The carried value is `last` IGNORING NULLs — an

@@ -1,5 +1,7 @@
 package graft.ext
 
+import ByteReader._
+
 /** Pure-JVM container parsing for MP4/ISO-BMFF video headers
   * (ISO/IEC 14496-12 box structure: §4.2 box layout, §8.2.2 mvhd) —
   * byte-level, no codec dependency, the video sibling of
@@ -10,18 +12,6 @@ package graft.ext
 object VideoHeader {
 
   case class Mp4Header(nTracks: Int, timescale: Long, durationTicks: Long)
-
-  private def u8(b: Array[Byte], i: Int): Int = b(i) & 0xff
-
-  private def be32(b: Array[Byte], i: Int): Long =
-    ((u8(b, i).toLong << 24) | (u8(b, i + 1) << 16) |
-      (u8(b, i + 2) << 8) | u8(b, i + 3)) & 0xffffffffL
-
-  private def be64(b: Array[Byte], i: Int): Long =
-    (be32(b, i) << 32) | be32(b, i + 4)
-
-  private def fourcc(b: Array[Byte], i: Int, s: String): Boolean =
-    s.indices.forall(j => b(i + j) == s.charAt(j).toByte)
 
   /** Parse an MP4 header, or None when the payload is not ISO-BMFF.
     *
@@ -36,21 +26,21 @@ object VideoHeader {
     */
   def parseMp4(b: Array[Byte]): Option[Mp4Header] = {
     if (b.length < 16) return None
-    val ftypSize = be32(b, 0)
+    val ftypSize = be32u(b, 0)
     if (ftypSize < 8 || ftypSize > 1024 || ftypSize > b.length ||
-        !fourcc(b, 4, "ftyp")) return None
+        !ascii(b, 4, "ftyp")) return None
     // top-level walk to moov
     var i = ftypSize.toInt
     var moov = -1
     var moovEnd = -1
     while (i + 8 <= b.length && moov < 0) {
-      var size = be32(b, i)
+      var size = be32u(b, i)
       var header = 8
       if (size == 1 && i + 16 <= b.length) {
         size = be64(b, i + 8); header = 16
       }
       if (size < header || i + size > b.length) return None
-      if (fourcc(b, i + 4, "moov")) { moov = i + header; moovEnd = i + size.toInt }
+      if (ascii(b, i + 4, "moov")) { moov = i + header; moovEnd = i + size.toInt }
       i += size.toInt
     }
     if (moov < 0) return None
@@ -60,15 +50,15 @@ object VideoHeader {
     var ts = -1L
     var dur = -1L
     while (j + 8 <= moovEnd) {
-      val size = be32(b, j)
+      val size = be32u(b, j)
       if (size < 8 || j + size > moovEnd) return None
-      if (fourcc(b, j + 4, "trak")) nTracks += 1
-      else if (fourcc(b, j + 4, "mvhd") && j + 12 <= moovEnd) {
+      if (ascii(b, j + 4, "trak")) nTracks += 1
+      else if (ascii(b, j + 4, "mvhd") && j + 12 <= moovEnd) {
         val version = u8(b, j + 8)
         if (version == 0 && j + 28 <= moovEnd) {
-          ts = be32(b, j + 20); dur = be32(b, j + 24)
+          ts = be32u(b, j + 20); dur = be32u(b, j + 24)
         } else if (version == 1 && j + 40 <= moovEnd) {
-          ts = be32(b, j + 28); dur = be64(b, j + 32)
+          ts = be32u(b, j + 28); dur = be64(b, j + 32)
         }
       }
       j += size.toInt

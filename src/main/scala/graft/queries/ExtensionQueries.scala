@@ -45,6 +45,11 @@ object ExtensionQueries {
       : Seq[(String, () => org.apache.spark.sql.DataFrame)] =
     ExtensionSupport.stageThunks(s, dir)
 
+  /** See [[ExtensionSupport.sideStage]]. */
+  private[graft] def sideStage(s: SparkSession, dir: String,
+                               name: String): Any =
+    ExtensionSupport.sideStage(s, dir, name)
+
   /** See [[ExtensionSupport.stageRawFrames]]. */
   private[graft] def stageRawFrames(s: SparkSession, dir: String)
       : Seq[(String, () => org.apache.spark.sql.DataFrame)] =

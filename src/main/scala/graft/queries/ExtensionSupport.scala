@@ -204,7 +204,7 @@ private[queries] object ExtensionSupport {
       s"graft_bucketed_${bucketedSuffix(s, dir)}")
     if (ownDir.isDirectory)
       ownDir.setLastModified(System.currentTimeMillis())
-    side(s, dir, "bucketed_layout"): Unit
+    sideStage(s, dir, "bucketed_layout"): Unit
   }
 
   private def writeBucketedLayout(s: SparkSession, dir: String): Unit = {
@@ -329,7 +329,7 @@ private[queries] object ExtensionSupport {
     */
   private[queries] def incrBloomWords(s: SparkSession,
                                       dir: String): DedupOps.BloomWords =
-    side(s, dir, "incr_bloom").asInstanceOf[DedupOps.BloomWords]
+    sideStage(s, dir, "incr_bloom").asInstanceOf[DedupOps.BloomWords]
 
   private def incrBloomWordsRaw(s: SparkSession,
                                 dir: String): DedupOps.BloomWords =
@@ -359,8 +359,8 @@ private[queries] object ExtensionSupport {
       raw: (SparkSession, String) => DataFrame,
       ownRow: Boolean = true) extends StageDef
 
-  /** A driver-side artifact that is not a DataFrame, memoized per
-    * (session, dir, fingerprint) in [[sideCache]].
+  /** A driver-side artifact that is not a DataFrame, memoized in the
+    * same [[Stages]] cache as the frames (no checkpoint).
     */
   private[queries] final case class SideStage(
       name: String, fpFiles: Seq[String],
@@ -432,23 +432,13 @@ private[queries] object ExtensionSupport {
       case d => sys.error(s"stage '${d.name}' is not a DataFrame")
     }
 
-  /** Side artifacts with the fingerprint they were built from, keyed
-    * like [[Stages]] by (session, dir, name). A build runs inside
-    * compute's bin lock — acceptable for these two short entries.
-    */
-  private val sideCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Long, Any)]()
+  private def side(s: SparkSession, dir: String, d: SideStage): Any =
+    Stages.artifact(s, memoKey(dir, d.name), fingerprint(dir, d))(
+      d.build(s, dir))
 
-  private def sideKey(s: SparkSession, dir: String, name: String): String =
-    s"${s.sparkContext.applicationId}|${memoKey(dir, name)}"
-
-  private def side(s: SparkSession, dir: String, d: SideStage): Any = {
-    val fp = fingerprint(dir, d)
-    sideCache.compute(sideKey(s, dir, d.name), (_, cur) =>
-      if (cur != null && cur._1 == fp) cur else (fp, d.build(s, dir)))._2
-  }
-
-  private def side(s: SparkSession, dir: String, name: String): Any =
+  /** The memoized artifact of side stage `name` over `dir`. */
+  private[graft] def sideStage(s: SparkSession, dir: String,
+                               name: String): Any =
     stageDef(name) match {
       case d: SideStage => side(s, dir, d)
       case d => sys.error(s"stage '${d.name}' is not a side artifact")
@@ -495,10 +485,7 @@ private[queries] object ExtensionSupport {
     */
   private[graft] def evictStage(s: SparkSession, dir: String,
                                 name: String): Unit =
-    stageDef(name) match {
-      case _: FrameStage => Stages.evict(s, memoKey(dir, name))
-      case _: SideStage => sideCache.remove(sideKey(s, dir, name)): Unit
-    }
+    Stages.evict(s, memoKey(dir, stageDef(name).name))
 
   /** Drop every stage of (session, dir), so [[prebuildStages]] can time
     * a REBUILD — one-shot stage costs carry ±0.3 s of scheduling

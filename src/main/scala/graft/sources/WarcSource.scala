@@ -6,6 +6,8 @@ import java.nio.charset.StandardCharsets
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.ext.ByteReader.{le16, le32u, u8}
+
 /** Distributed WARC (ISO 28500) reader — the container format web
   * corpora actually arrive in (Common Crawl ships ~90k .warc.gz files
   * per snapshot). Same grain as [[ZipSource]]: each archive file is
@@ -251,26 +253,21 @@ object WarcSource {
       s"gzip member ${member + 1} (offset $off, after $member " +
         s"complete member(s)): $msg")
 
-    private def u8(i: Int): Int = bytes(i) & 0xff
-    private def le16(i: Int): Int = u8(i) | (u8(i + 1) << 8)
-    private def le32(i: Int): Long =
-      (u8(i) | (u8(i + 1) << 8) | (u8(i + 2) << 16) |
-        (u8(i + 3).toLong << 24)) & 0xffffffffL
-
     /** Parse one member header at `off`, positioning `off` at the
       * deflate stream and arming a fresh Inflater.
       */
     private def startMember(): Unit = {
       if (off + 10 > bytes.length) gzFail("truncated header")
-      if (u8(off) != 0x1f || u8(off + 1) != 0x8b)
-        gzFail(f"bad magic ${u8(off)}%02x${u8(off + 1)}%02x")
-      if (u8(off + 2) != 8) gzFail(s"unsupported CM ${u8(off + 2)}")
-      val flg = u8(off + 3)
+      if (u8(bytes, off) != 0x1f || u8(bytes, off + 1) != 0x8b)
+        gzFail(f"bad magic ${u8(bytes, off)}%02x${u8(bytes, off + 1)}%02x")
+      if (u8(bytes, off + 2) != 8)
+        gzFail(s"unsupported CM ${u8(bytes, off + 2)}")
+      val flg = u8(bytes, off + 3)
       if ((flg & 0xe0) != 0) gzFail(f"reserved FLG bits set ($flg%02x)")
       var i = off + 10 // magic(2) CM(1) FLG(1) MTIME(4) XFL(1) OS(1)
       if ((flg & 4) != 0) { // FEXTRA
         if (i + 2 > bytes.length) gzFail("truncated FEXTRA")
-        i += 2 + le16(i)
+        i += 2 + le16(bytes, i)
       }
       def skipZeroTerminated(what: String): Unit = {
         while (i < bytes.length && bytes(i) != 0) i += 1
@@ -297,8 +294,8 @@ object WarcSource {
       off = bytes.length - inf.getRemaining
       inf.end(); inf = null
       if (off + 8 > bytes.length) gzFail("truncated trailer")
-      val wantCrc = le32(off)
-      val wantIsize = le32(off + 4)
+      val wantCrc = le32u(bytes, off)
+      val wantIsize = le32u(bytes, off + 4)
       if (crc.getValue != wantCrc)
         gzFail(f"CRC32 mismatch (got ${crc.getValue}%08x, " +
           f"trailer says $wantCrc%08x)")

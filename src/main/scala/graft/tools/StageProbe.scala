@@ -16,7 +16,11 @@ import graft.queries.ExtensionQueries
   * threads, not extra work.
   *
   * `runMain graft.tools.StageProbe <stage> <reps> <dir1,dir2,...>`
-  * Dev-loop tool only; official figures come from [[graft.Bench]] /
+  * (default dirs: the 10× and 100× tiers [[graft.ScaleExponents]]
+  * generates, `target/x10,target/x100`). For a stage's run-to-run
+  * spread, probe it over one tier with several reps, e.g.
+  * `StageProbe shingle_pairs 6 target/x10`. Dev-loop tool only;
+  * official figures come from [[graft.Bench]] /
   * [[graft.ScaleExponents]]; the session is Bench's ([[graft.Session]]).
   */
 object StageProbe {
@@ -24,7 +28,7 @@ object StageProbe {
     val stageName = args.lift(0).getOrElse("ivfpq_adc20")
     val reps = args.lift(1).map(_.toInt).getOrElse(3)
     val dirs = args.lift(2).map(_.split(',').toSeq)
-      .getOrElse(Seq("target/sf1", "target/sf10"))
+      .getOrElse(Seq("target/x10", "target/x100"))
     val spark = graft.Session.local()
     val stats = TaskStats.attach(spark.sparkContext)
     for (dir <- dirs) {

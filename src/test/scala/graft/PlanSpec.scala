@@ -946,11 +946,15 @@ class PlanSpec extends SparkSpec {
   }
 
   test("stage table: evictStages makes the next access rebuild") {
-    import graft.queries.ExtensionQueries.{evictStages, stageThunks}
-    // a memo hit returns the very same checkpointed frame; a rebuild
-    // materializes a new one
-    for (name <- Seq("events_census", "i2b2_hier_last")) {
-      def get() = stageThunks(spark, dir).toMap.apply(name)()
+    import graft.queries.ExtensionQueries.{evictStages, sideStage,
+      stageThunks}
+    // a memo hit returns the very same checkpointed frame or side
+    // artifact; a rebuild materializes a new one
+    for (name <- Seq("events_census", "i2b2_hier_last", "incr_bloom")) {
+      def get(): AnyRef =
+        if (name == "incr_bloom")
+          sideStage(spark, dir, name).asInstanceOf[AnyRef]
+        else stageThunks(spark, dir).toMap.apply(name)()
       val built = get()
       assert(get() eq built, s"$name: memo hit must not rebuild")
       evictStages(spark, dir)
