@@ -1,12 +1,13 @@
 package graft
 
 import scala.collection.mutable
+import scala.util.Try
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow}
+import org.apache.spark.sql.SparkSession
 
 import graft.queries.ExtensionQueries
+import graft.tools.Probe
 
 /** Scale run (dev tool): times every shared stage and every named
   * query over the source fixtures (1×) and their replica-scaled tiers
@@ -22,13 +23,13 @@ import graft.queries.ExtensionQueries
   * [[SparkEntry.queries]] name. Tiers and the record are written
   * relative to the cwd.
   *
-  * Each rep evicts every stage and rebuilds the stage table through
-  * `prebuildStages` (fresh builds, never a memo hit), then times each
-  * query over the built stages through `queryExecution.toRdd.count()`.
-  * Not `df.count()`: that plans a new Aggregate in which Catalyst drops
-  * row-preserving joins (graph_pagerank's rank joins vanish), so it
-  * under-times such queries. A query that fails records its error
-  * class in its row and the run goes on.
+  * One untimed pass over the 1× tier (evict, prebuild, each query
+  * once) comes first, so JIT warm-up is not charged to the first hop.
+  * Each rep then evicts every stage and rebuilds the stage table
+  * through `prebuildStages` (fresh builds, never a memo hit), then
+  * times each query over the built stages with [[Probe.timeQuery]]
+  * and takes its plan flags from [[Probe.census]]. A query that fails
+  * records its error class in its row and the run goes on.
   */
 object ScaleExponents {
 
@@ -55,19 +56,6 @@ object ScaleExponents {
     finally spark.stop()
   }
 
-  /** `CartesianProduct` in the executed plan; `global-window` for a
-    * Window with no partition spec in the optimized plan.
-    */
-  private def planFlags(df: DataFrame): Seq[String] = {
-    val qe = df.queryExecution
-    Seq(
-      "CartesianProduct" ->
-        qe.executedPlan.toString.contains("CartesianProduct"),
-      "global-window" -> qe.optimizedPlan.collectFirst {
-        case w: LWindow if w.partitionSpec.isEmpty => w }.isDefined)
-      .collect { case (flag, true) => flag }
-  }
-
   /** The scale run, with the tiers and `SF10_SMOKE.md` under `root`. */
   def run(spark: SparkSession, srcDir: String, reps: Int,
           factors: Seq[Int], names: Seq[String], root: String): Unit = {
@@ -86,6 +74,9 @@ object ScaleExponents {
       byTier(f) = c
       c
     }
+    ExtensionQueries.evictStages(spark, srcDir)
+    ExtensionQueries.prebuildStages(spark, srcDir)
+    names.foreach(n => Try(Probe.timeQuery(spark, srcDir, n)))
     for ((f, dir) <- tiers; rep <- 1 to reps) {
       ExtensionQueries.evictStages(spark, dir)
       for ((name, secs) <- ExtensionQueries.prebuildStages(spark, dir)) {
@@ -99,11 +90,12 @@ object ScaleExponents {
       for (name <- names) {
         val c = update(name, f) { c =>
           try {
-            val t0 = System.nanoTime()
-            val df = SparkEntry.queries(name)(spark, dir)
-            val rows = df.queryExecution.toRdd.count()
-            c.copy(secs = c.secs min (System.nanoTime() - t0) / 1e9,
-              rows = Some(rows), flags = planFlags(df))
+            val (df, secs, rows) = Probe.timeQuery(spark, dir, name)
+            val census = Probe.census(df)
+            c.copy(secs = c.secs min secs, rows = Some(rows),
+              flags = Seq("CartesianProduct" -> (census.cart > 0),
+                "global-window" -> census.globalWindow)
+                .collect { case (flag, true) => flag })
           } catch {
             case NonFatal(e) => c.copy(error = Some(e.getClass.getSimpleName))
           }
@@ -119,7 +111,8 @@ object ScaleExponents {
     sb ++= s"Replica-scaled tiers of `$srcDir` (`graft.ScaleFixtures`): " +
       tiers.map { case (f, d) => s"${f}x = ${ScaleFixtures.sizes(spark, d)}" }
         .mkString(", ") +
-      s". ${spark.sparkContext.master}, min of $reps reps; each rep " +
+      s". ${spark.sparkContext.master}, min of $reps reps after one " +
+      "untimed pass over the 1x tier; each rep " +
       "evicts and rebuilds every stage (`prebuildStages`), then runs each " +
       "query through `toRdd.count()` over the built stages, " +
       s"${java.time.LocalDate.now()}. alpha = log(t_next / t_prev) / " +

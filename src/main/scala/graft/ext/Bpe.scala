@@ -4,12 +4,10 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Byte-pair-encoding merge induction (Sennrich/Haddow/Birch, ACL'16 —
-  * the subword tokenizer-training algorithm every LLM pipeline runs) —
-  * the bounded-round distributed form: each round is ONE pair-count
-  * aggregation over the word table plus a broadcast one-row re-encode,
-  * so k merges cost k aggregations of a vocabulary-bounded table, not
-  * k passes over the corpus. The corpus-scale work (word counting)
-  * happens exactly once.
+  * the subword tokenizer-training algorithm every LLM pipeline runs):
+  * the corpus-scale work (word counting) happens exactly once, and the
+  * k merge rounds run over the capped word table ([[train]]), not k
+  * passes over the corpus.
   *
   * THE representation trick makes the whole loop engine-portable: a
   * word's symbol sequence is kept as a DELIMITED STRING — every symbol
@@ -34,9 +32,7 @@ import org.apache.spark.sql.functions._
   * The per-round top pair is the (count, pair-bytes) maximum —
   * deterministic on any engine, both orders bytewise. The merge
   * decision is inherently sequential (merge r changes the pair counts
-  * merge r+1 sees), so the rounds chain; each round's winner is a
-  * ONE-ROW broadcast against the word table, and the plan stays fully
-  * lazy — no driver-side loop state, no collect.
+  * merge r+1 sees), so the rounds chain.
   */
 object Bpe {
 
@@ -64,27 +60,6 @@ object Bpe {
       .orderBy(col("__wc").desc, col("__w"))
       .limit(maxWords)
       .select(col("__wc"), symbolize(col("__w")).as("__str"))
-
-  /** Adjacent-pair counts of a (``__wc``, ``__str``) word table:
-    * (`__pat` the replace pattern `|A||B|`, `__rep` its replacement
-    * `|AB|`, `n` the corpus-weighted count).
-    */
-  def pairCounts(words: DataFrame): DataFrame = {
-    val syms = split(trim(col("__str"), "|"), "\\|\\|")
-    val cnt = greatest(size(syms) - 1, lit(0))
-    val pairs = zip_with(
-      slice(syms, lit(1), cnt), slice(syms, lit(2), cnt),
-      (a, b) => struct(a.as("l"), b.as("r")))
-    words
-      .select(col("__wc"), explode(pairs).as("__p"))
-      .groupBy(col("__p.l").as("__l"), col("__p.r").as("__r"))
-      .agg(sum(col("__wc")).as("n"))
-      .select(col("__l"), col("__r"),
-        concat(lit("|"), col("__l"), lit("||"), col("__r"), lit("|"))
-          .as("__pat"),
-        concat(lit("|"), col("__l"), col("__r"), lit("|")).as("__rep"),
-        col("n"))
-  }
 
   /** Unsigned-byte (UTF-8) string comparison — Spark's binary string
     * collation, NOT Java's UTF-16 `compareTo` (they diverge above the

@@ -212,7 +212,7 @@ object EtlMain {
     // reference takes it once at transform start, :182)
     val runTs = java.time.LocalDateTime.now(java.time.ZoneOffset.UTC)
       .format(java.time.format.DateTimeFormatter
-        .ofPattern("dd-MM-yyyy HH:mm:ss"))
+        .ofPattern(I2b2Config.RunTimestampFormat))
     val report = run(spark, new JdkFetcher(), cfg, runTs)
     println(s"table created: ${report.createdTable}; " +
       s"rows written: ${report.rowsWritten}; " +

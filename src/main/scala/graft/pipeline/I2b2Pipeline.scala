@@ -6,10 +6,10 @@ import graft.ops._
 
 /** Configuration for the i2b2 ontology transform.
   *
-  * @param runTimestamp single per-run timestamp, pre-formatted
-  *   `dd-MM-yyyy HH:mm:ss` (Angelo_ETL_Task.py:182-183 computes
-  *   `datetime.now()` ONCE so every row shares it; passing it in keeps
-  *   the transform pure/deterministic and testable)
+  * @param runTimestamp single per-run timestamp, pre-formatted in
+  *   [[I2b2Config.RunTimestampFormat]] (Angelo_ETL_Task.py:182-183
+  *   computes `datetime.now()` ONCE so every row shares it; passing it
+  *   in keeps the transform pure/deterministic and testable)
   * @param bugCompatFullname reproduce the reference bug at
   *   Angelo_ETL_Task.py:40 where every C_FULLNAME segment carries the
   *   LEAF's name; default false = spec-correct per-ancestor names
@@ -18,6 +18,13 @@ import graft.ops._
 case class I2b2Config(
     runTimestamp: String,
     bugCompatFullname: Boolean = false)
+
+object I2b2Config {
+  /** The run-timestamp string format, read both as a
+    * `DateTimeFormatter` and as a Spark `to_timestamp` pattern.
+    */
+  val RunTimestampFormat = "dd-MM-yyyy HH:mm:ss"
+}
 
 /** The whole reference `transform()` (Angelo_ETL_Task.py:150-274) as ONE
   * declarative Spark plan:

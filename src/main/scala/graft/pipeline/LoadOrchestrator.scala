@@ -58,14 +58,15 @@ object LoadOrchestrator {
     s"CREATE TABLE $table (${cols.mkString(", ")})"
   }
 
-  /** Engine rows carry run timestamps as `dd-MM-yyyy HH:mm:ss` strings
-    * (F11 string parity); the DB columns are TIMESTAMP — cast at the
-    * sink boundary only.
+  /** Engine rows carry run timestamps as
+    * [[I2b2Config.RunTimestampFormat]] strings (F11 string parity); the
+    * DB columns are TIMESTAMP — cast at the sink boundary only.
     */
   def castRunTimestamps(df: DataFrame): DataFrame =
     Seq("UPDATE_DATE", "DOWNLOAD_DATE", "IMPORT_DATE")
       .foldLeft(df)((d, c) =>
-        d.withColumn(c, to_timestamp(col(c), "dd-MM-yyyy HH:mm:ss")))
+        d.withColumn(c,
+          to_timestamp(col(c), I2b2Config.RunTimestampFormat)))
 
   private def withConnection[A](url: String, props: Properties)
                                (f: Connection => A): A = {
@@ -236,7 +237,7 @@ object LoadOrchestrator {
     Timestamp.from(
       java.time.LocalDateTime.parse(runTs,
         java.time.format.DateTimeFormatter
-          .ofPattern("dd-MM-yyyy HH:mm:ss"))
+          .ofPattern(I2b2Config.RunTimestampFormat))
         .atZone(sessionZone).toInstant)
   }
 }

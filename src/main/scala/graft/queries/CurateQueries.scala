@@ -16,6 +16,29 @@ import graft.queries.ExtensionSupport._
   */
 private[queries] object CurateQueries {
 
+  /** The census the lossless round-trip queries (`src_jsonl_roundtrip`,
+    * `src_orc_roundtrip`, `src_jsonl_zst_roundtrip`,
+    * `src_avro_roundtrip`) take of the corpus they read back: per
+    * (source, lang), the document count, char and length sums and an
+    * md5-prefix content checksum. Their oracle, [[RoundtripCensusSql]],
+    * takes the same census straight off the parquet.
+    */
+  private def roundtripCensus(read: DataFrame): DataFrame =
+    read.groupBy("source", "lang")
+      .agg(count(lit(1)).as("n_docs"),
+        sum("n_chars").as("sum_chars"),
+        sum(length(col("text")).cast("long")).as("sum_len"),
+        sum(PortableHash.md5PrefixLong(col("text"), 14))
+          .as("text_checksum"))
+
+  private val RoundtripCensusSql =
+    """SELECT source, lang, count(*) AS n_docs,
+      |  CAST(sum(n_chars) AS BIGINT) AS sum_chars,
+      |  CAST(sum(length(text)) AS BIGINT) AS sum_len,
+      |  CAST(sum(CAST('0x' || substr(md5(text), 1, 14) AS BIGINT))
+      |    AS BIGINT) AS text_checksum
+      |FROM documents GROUP BY 1, 2""".stripMargin
+
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // Deterministic stratified downsampling: membership from a salted
@@ -311,13 +334,7 @@ private[queries] object CurateQueries {
       val path = graft.sources.JsonlSource.stage(d, "target/jsonl",
         s"${dir.split('/').last}_documents",
         Tables.fingerprint(s"$dir/documents.parquet"))
-      graft.sources.JsonlSource.read(s, path, d.schema)
-        .groupBy("source", "lang")
-        .agg(count(lit(1)).as("n_docs"),
-          sum("n_chars").as("sum_chars"),
-          sum(length(col("text")).cast("long")).as("sum_len"),
-          sum(PortableHash.md5PrefixLong(col("text"), 14))
-            .as("text_checksum"))
+      roundtripCensus(graft.sources.JsonlSource.read(s, path, d.schema))
     },
 
     // ORC round-trip: the columnar sibling of the JSONL one — write
@@ -329,13 +346,7 @@ private[queries] object CurateQueries {
       val path = graft.sources.OrcSource.stage(d, "target/orc",
         s"${dir.split('/').last}_documents",
         Tables.fingerprint(s"$dir/documents.parquet"))
-      graft.sources.OrcSource.read(s, path, d.schema)
-        .groupBy("source", "lang")
-        .agg(count(lit(1)).as("n_docs"),
-          sum("n_chars").as("sum_chars"),
-          sum(length(col("text")).cast("long")).as("sum_len"),
-          sum(PortableHash.md5PrefixLong(col("text"), 14))
-            .as("text_checksum"))
+      roundtripCensus(graft.sources.OrcSource.read(s, path, d.schema))
     },
 
 
@@ -348,13 +359,8 @@ private[queries] object CurateQueries {
       val path = graft.sources.JsonlSource.stageZst(d, "target/jsonl_zst",
         s"${dir.split('/').last}_documents",
         Tables.fingerprint(s"$dir/documents.parquet"))
-      graft.sources.JsonlSource.readCompressed(s, path, d.schema)
-        .groupBy("source", "lang")
-        .agg(count(lit(1)).as("n_docs"),
-          sum("n_chars").as("sum_chars"),
-          sum(length(col("text")).cast("long")).as("sum_len"),
-          sum(PortableHash.md5PrefixLong(col("text"), 14))
-            .as("text_checksum"))
+      roundtripCensus(
+        graft.sources.JsonlSource.readCompressed(s, path, d.schema))
     },
 
     // Avro round-trip: the ROW-oriented interchange sibling (Kafka /
@@ -367,13 +373,7 @@ private[queries] object CurateQueries {
       val path = graft.sources.AvroSource.stage(d, "target/avro",
         s"${dir.split('/').last}_documents",
         Tables.fingerprint(s"$dir/documents.parquet"))
-      graft.sources.AvroSource.read(s, path, d.schema)
-        .groupBy("source", "lang")
-        .agg(count(lit(1)).as("n_docs"),
-          sum("n_chars").as("sum_chars"),
-          sum(length(col("text")).cast("long")).as("sum_len"),
-          sum(PortableHash.md5PrefixLong(col("text"), 14))
-            .as("text_checksum"))
+      roundtripCensus(graft.sources.AvroSource.read(s, path, d.schema))
     },
 
     // WARC ingestion round-trip: stage the corpus as per-record-gzip
@@ -432,23 +432,13 @@ private[queries] object CurateQueries {
     // escape, a truncated line, a mistyped field) breaks the
     // checksum or counts
     "src_jsonl_roundtrip" ->
-      """SELECT source, lang, count(*) AS n_docs,
-        |  CAST(sum(n_chars) AS BIGINT) AS sum_chars,
-        |  CAST(sum(length(text)) AS BIGINT) AS sum_len,
-        |  CAST(sum(CAST('0x' || substr(md5(text), 1, 14) AS BIGINT))
-        |    AS BIGINT) AS text_checksum
-        |FROM documents GROUP BY 1, 2""".stripMargin,
+      RoundtripCensusSql,
 
 
     // identical census: the round-trip must be lossless, so the
     // oracle never reads the ORC at all
     "src_orc_roundtrip" ->
-      """SELECT source, lang, count(*) AS n_docs,
-        |  CAST(sum(n_chars) AS BIGINT) AS sum_chars,
-        |  CAST(sum(length(text)) AS BIGINT) AS sum_len,
-        |  CAST(sum(CAST('0x' || substr(md5(text), 1, 14) AS BIGINT))
-        |    AS BIGINT) AS text_checksum
-        |FROM documents GROUP BY 1, 2""".stripMargin,
+      RoundtripCensusSql,
 
 
     // the WET pipeline replayed from raw text: expected extraction,
@@ -478,22 +468,12 @@ private[queries] object CurateQueries {
 
     // identical census: the zstd shards must be lossless too
     "src_jsonl_zst_roundtrip" ->
-      """SELECT source, lang, count(*) AS n_docs,
-        |  CAST(sum(n_chars) AS BIGINT) AS sum_chars,
-        |  CAST(sum(length(text)) AS BIGINT) AS sum_len,
-        |  CAST(sum(CAST('0x' || substr(md5(text), 1, 14) AS BIGINT))
-        |    AS BIGINT) AS text_checksum
-        |FROM documents GROUP BY 1, 2""".stripMargin,
+      RoundtripCensusSql,
 
     // identical census again: the Avro round-trip must be lossless,
     // so the oracle never reads the Avro at all
     "src_avro_roundtrip" ->
-      """SELECT source, lang, count(*) AS n_docs,
-        |  CAST(sum(n_chars) AS BIGINT) AS sum_chars,
-        |  CAST(sum(length(text)) AS BIGINT) AS sum_len,
-        |  CAST(sum(CAST('0x' || substr(md5(text), 1, 14) AS BIGINT))
-        |    AS BIGINT) AS text_checksum
-        |FROM documents GROUP BY 1, 2""".stripMargin,
+      RoundtripCensusSql,
 
     // same chunk arithmetic as text_chunk; shard = 7-hex salted hash
     // % 8, cumulative token count per shard in (doc_id, chunk_idx)

@@ -6,11 +6,12 @@ import org.apache.spark.SparkContext
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.graft.ListenerDrain
 
-/** Task telemetry of the dev probes, collected off SparkListenerTaskEnd:
-  * per-task run time, GC and shuffle bytes of every task that ends on
-  * `sc` while attached. `reset` and `snapshot` first drain the listener
-  * bus, so no task of an earlier job lands after a reset and every task
-  * of a finished job is counted.
+/** Task telemetry of [[Probe]]'s reps, collected off
+  * SparkListenerTaskEnd: per-task run time, GC and shuffle bytes of
+  * every task that ends on `sc` while attached. The probe's rep line
+  * prints every [[TaskStats.Snapshot]] field. `reset` and `snapshot`
+  * first drain the listener bus, so no task of an earlier job lands
+  * after a reset and every task of a finished job is counted.
   */
 final class TaskStats private (sc: SparkContext) extends SparkListener {
   private val durs = ArrayBuffer.empty[Long] // ms
